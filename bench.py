@@ -68,39 +68,6 @@ def corpus_path(n_docs: int) -> str:
     )
 
 
-def _codec_table() -> dict:
-    """FOR vs delta+varbyte on 128-doc blocks at three docID-gap
-    densities — the evidence for the per-block codec choice
-    (PAPERS.md: Delta vs Frame-of-Reference, VLDB 2024)."""
-    import numpy as np
-
-    from noise_spark.index import codec as C
-
-    out = {}
-    rng = np.random.default_rng(0)
-    block = 128
-    for label, gap in (("gap1", 1), ("gap8", 8), ("gap1k", 1000)):
-        ids = np.cumsum(rng.integers(1, 2 * gap + 1, size=64_000)).astype(np.int64)
-        blocks = [ids[s : s + block] for s in range(0, ids.size, block)]
-        for cname, enc, dec in (
-            ("varbyte", C.delta_encode, C.delta_decode),
-            ("for", lambda a: C.for_encode(a.astype(np.uint64)), C.for_decode),
-        ):
-            t0 = time.time()
-            bufs = [enc(b) for b in blocks]
-            enc_s = time.time() - t0
-            t0 = time.time()
-            for buf in bufs:
-                dec(buf)
-            dec_s = time.time() - t0
-            out[f"{label}_{cname}"] = {
-                "bytes": sum(len(b) for b in bufs),
-                "enc_sec": round(enc_s, 4),
-                "dec_sec": round(dec_s, 4),
-            }
-    return out
-
-
 def main():
     t_all = time.time()
     spark = get_spark("noise_spark_bench", master=f"local[{CPUS}]", shuffle_partitions=CPUS)
@@ -210,7 +177,6 @@ def main():
 
     total = time.time() - t_all
     shutil.rmtree(idx_dir, ignore_errors=True)
-    codec_table = _codec_table()
     print(
         json.dumps(
             {
@@ -231,7 +197,6 @@ def main():
                 "index_bytes": index_bytes,
                 "wand_blocks_decoded": wand_blocks,
                 "queryset_batched_sec": queryset_batched_sec,
-                "codec_table": codec_table,
             }
         )
     )

@@ -97,7 +97,10 @@ SEGMENTS_SCHEMA = T.StructType(
         # derive from segment METADATA, so the token stream is consumed
         # exactly once by the whole build
         T.StructField("tf_sum", T.LongType(), False),
-        T.StructField("codec", T.StringType(), False),  # docID codec: varbyte|for
+        # always "varbyte" (docID-delta + LEB128, the only codec). No
+        # engine code reads it; it stays so the segment layout is unchanged
+        # and perfbench's codec probe can still select it
+        T.StructField("codec", T.StringType(), False),
         T.StructField("bucket", T.IntegerType(), False),
     ]
 )
@@ -146,7 +149,6 @@ class BuildConfig:
     fields: tuple | str = ("text",)
     block_size: int = 128
     postings_per_salt: int = 50_000  # hot-term split threshold (df per salt)
-    doc_codec: str = "varbyte"  # docID block codec: "varbyte" (delta+LEB128) | "for" (bit-packed frame-of-reference)
     n_buckets: int = N_BUCKETS
     partitions: int | None = None
     verify_extraction: bool = True
@@ -265,7 +267,7 @@ def _make_extractor(id_cols: list, extra: list):
     return fn
 
 
-def _make_block_builder(block_size: int, n_buckets: int, doc_codec: str = "varbyte"):
+def _make_block_builder(block_size: int, n_buckets: int):
     def build_blocks(key, pdf: pd.DataFrame) -> pd.DataFrame:
         term, salt = key
         pdf = pdf.sort_values("doc_id")
@@ -279,19 +281,12 @@ def _make_block_builder(block_size: int, n_buckets: int, doc_codec: str = "varby
         # ONE numpy encode pass per column for the whole posting list;
         # per-block payloads are byte-offset slices. Block-leading docIDs
         # are stored absolute so each block decodes independently.
-        if doc_codec == "for":
-            doc_payloads = [
-                codec.for_encode(doc_ids[s_:e_].astype(np.uint64))
-                for s_, e_ in zip(starts, ends)
-            ]
-        else:
-            deltas = np.diff(doc_ids, prepend=np.int64(0))
-            deltas[starts] = doc_ids[starts]
-            dbuf, dlen = codec.varbyte_encode_with_lengths(deltas.astype(np.uint64))
+        deltas = np.diff(doc_ids, prepend=np.int64(0))
+        deltas[starts] = doc_ids[starts]
+        dbuf, dlen = codec.varbyte_encode_with_lengths(deltas.astype(np.uint64))
         tbuf, tlen = codec.varbyte_encode_with_lengths(tfs.astype(np.uint64))
         lbuf, llen = codec.varbyte_encode_with_lengths(dls.astype(np.uint64))
-        if doc_codec != "for":
-            doffs = np.concatenate(([0], np.cumsum(dlen)))
+        doffs = np.concatenate(([0], np.cumsum(dlen)))
         toffs = np.concatenate(([0], np.cumsum(tlen)))
         loffs = np.concatenate(([0], np.cumsum(llen)))
         # positions rows already carry varbyte [n, p0, Δ...]; block
@@ -312,16 +307,14 @@ def _make_block_builder(block_size: int, n_buckets: int, doc_codec: str = "varby
             "n_docs": (ends - starts).astype(np.int64),
             "first_doc": doc_ids[starts],
             "last_doc": doc_ids[ends - 1],
-            "docs": doc_payloads
-            if doc_codec == "for"
-            else [dbuf[doffs[s] : doffs[e]] for s, e in zip(starts, ends)],
+            "docs": [dbuf[doffs[s] : doffs[e]] for s, e in zip(starts, ends)],
             "tfs": [tbuf[toffs[s] : toffs[e]] for s, e in zip(starts, ends)],
             "dls": [lbuf[loffs[s] : loffs[e]] for s, e in zip(starts, ends)],
             "positions": [pbuf[poffs[s] : poffs[e]] for s, e in zip(starts, ends)],
             "max_tf": max_tf,
             "min_dl": min_dl,
             "tf_sum": tf_sum.astype(np.int64),
-            "codec": doc_codec,
+            "codec": "varbyte",
             "bucket": bucket,
         }
         return pd.DataFrame(rows, columns=[f.name for f in SEGMENTS_SCHEMA.fields])
@@ -607,7 +600,7 @@ def build_index(
         spark.conf.set("spark.sql.shuffle.partitions", str(merge_parts))
         try:
             segments = salted.groupBy("term", "salt").applyInPandas(
-                _make_block_builder(cfg.block_size, cfg.n_buckets, cfg.doc_codec),
+                _make_block_builder(cfg.block_size, cfg.n_buckets),
                 schema=SEGMENTS_SCHEMA,
             )
             # regroup by bucket before the partitioned write: otherwise

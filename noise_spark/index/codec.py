@@ -24,6 +24,7 @@ def varbyte_encode_with_lengths(values: np.ndarray) -> tuple[bytes, np.ndarray]:
     v = np.asarray(values, dtype=np.uint64)
     if v.size == 0:
         return b"", np.empty(0, dtype=np.int64)
+    # byte length per value = ceil(bits/7), min 1
     nbytes = np.ones(v.size, dtype=np.int64)
     tmp = v >> np.uint64(7)
     while tmp.any():
@@ -48,30 +49,7 @@ def varbyte_encode_with_lengths(values: np.ndarray) -> tuple[bytes, np.ndarray]:
 
 def varbyte_encode(values: np.ndarray) -> bytes:
     """Vectorized LEB128 encode of a non-negative int array."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    # byte length per value = ceil(bits/7), min 1
-    nbytes = np.ones(v.size, dtype=np.int64)
-    tmp = v >> np.uint64(7)
-    while tmp.any():
-        nbytes += (tmp > 0).astype(np.int64)
-        tmp >>= np.uint64(7)
-    ends = np.cumsum(nbytes)
-    starts = ends - nbytes
-    out = np.zeros(int(ends[-1]), dtype=np.uint8)
-    rem = v.copy()
-    idx = starts.copy()
-    active = np.ones(v.size, dtype=bool)
-    while active.any():
-        byte = (rem & np.uint64(0x7F)).astype(np.uint8)
-        rem >>= np.uint64(7)
-        more = rem > 0
-        sel = active
-        out[idx[sel]] = byte[sel] | (more[sel].astype(np.uint8) << 7)
-        idx[sel] += 1
-        active = sel & more
-    return out.tobytes()
+    return varbyte_encode_with_lengths(values)[0]
 
 
 def varbyte_decode(buf: bytes) -> np.ndarray:
@@ -106,43 +84,6 @@ def delta_decode(buf: bytes) -> np.ndarray:
     if deltas.size == 0:
         return np.empty(0, dtype=np.int64)
     return np.cumsum(deltas.astype(np.int64))
-
-
-def for_encode(values: np.ndarray) -> bytes:
-    """Frame-of-reference bit-packing: store (min, width) then each
-    value − min in fixed ``width`` bits. For dense sorted docID blocks
-    this beats delta+varbyte when deltas are uniform (cf. 'Can Delta
-    Compete with Frame-of-Reference for Lightweight Integer
-    Compression?', VLDB 2024 — PAPERS.md). Self-describing header:
-    varbyte [n, base, width]."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    base = int(v.min())
-    rel = v - np.uint64(base)
-    width = max(1, int(rel.max()).bit_length())
-    header = varbyte_encode(np.array([v.size, base, width], dtype=np.uint64))
-    bits = ((rel[:, None] >> np.arange(width, dtype=np.uint64)) & np.uint64(1)).astype(
-        np.uint8
-    )
-    packed = np.packbits(bits.reshape(-1), bitorder="little")
-    return header + packed.tobytes()
-
-
-def for_decode(buf: bytes) -> np.ndarray:
-    b = np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
-        return np.empty(0, dtype=np.int64)
-    # parse the 3-varint header
-    is_last = (b & 0x80) == 0
-    header_end = int(np.flatnonzero(is_last)[2]) + 1
-    n, base, width = varbyte_decode(bytes(b[:header_end])).astype(np.int64)
-    bits = np.unpackbits(b[header_end:], bitorder="little")[: n * width]
-    rel = (
-        bits.reshape(n, width).astype(np.uint64)
-        << np.arange(width, dtype=np.uint64)
-    ).sum(axis=1)
-    return (rel + np.uint64(base)).astype(np.int64)
 
 
 def vb_row(values) -> bytes:
@@ -189,28 +130,6 @@ def decode_positions_row(buf: bytes) -> np.ndarray:
     return np.cumsum(flat[1 : 1 + n])
 
 
-def encode_positions(positions_per_doc: list) -> bytes:
-    """Encode a block's per-doc position lists as one payload.
-
-    Layout per doc: varbyte(count), then varbyte(delta(positions)).
-    All docs' payloads are concatenated into a flat stream; the value
-    stream is [n0, d0_0.., n1, d1_0..] which vectorizes as one varbyte
-    pass over a single concatenated array.
-    """
-    parts = []
-    for pos in positions_per_doc:
-        p = np.asarray(pos, dtype=np.int64)
-        d = np.empty(p.size + 1, dtype=np.uint64)
-        d[0] = p.size
-        if p.size:
-            d[1] = np.uint64(p[0])
-            d[2:] = np.diff(p).astype(np.uint64)
-        parts.append(d)
-    if not parts:
-        return b""
-    return varbyte_encode(np.concatenate(parts))
-
-
 def split_positions(buf: bytes, n_docs: int) -> list:
     """Split a block positions payload back into the per-doc row buffers
     it was concatenated from (``positions_row`` slices) WITHOUT decoding
@@ -229,17 +148,4 @@ def split_positions(buf: bytes, n_docs: int) -> list:
         end_byte = int(ends[i - 1]) + 1
         out.append(buf[prev_byte:end_byte])
         prev_byte = end_byte
-    return out
-
-
-def decode_positions(buf: bytes, n_docs: int) -> list:
-    """Inverse of :func:`encode_positions` → list of int64 arrays."""
-    flat = varbyte_decode(buf).astype(np.int64)
-    out = []
-    i = 0
-    for _ in range(n_docs):
-        n = int(flat[i])
-        i += 1
-        out.append(np.cumsum(flat[i : i + n]))
-        i += n
     return out

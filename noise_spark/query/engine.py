@@ -568,7 +568,7 @@ class IndexReader:
             segs = segs.filter(
                 F.col("bucket").isin(buckets) & F.col("term").isin(list(terms))
             )
-        cols = ["term", "n_docs", "docs", "tfs", "dls", "codec"] + (
+        cols = ["term", "n_docs", "docs", "tfs", "dls"] + (
             ["positions"] if with_positions else []
         )
         segs = segs.select(*cols)
@@ -582,14 +582,9 @@ class IndexReader:
             for pdf in iterator:
                 frames = []
                 for row in pdf.itertuples(index=False):
-                    doc_ids = (
-                        C.for_decode(bytes(row.docs))
-                        if row.codec == "for"
-                        else C.delta_decode(bytes(row.docs))
-                    )
                     data = {
                         "term": row.term,
-                        "doc_id": doc_ids.astype(np.int64),
+                        "doc_id": C.delta_decode(bytes(row.docs)),
                         "tf": C.varbyte_decode(bytes(row.tfs)).astype(np.int32),
                         "dl": C.varbyte_decode(bytes(row.dls)).astype(np.int32),
                     }
@@ -1497,7 +1492,7 @@ class IndexReader:
             self.segments.filter(
                 F.col("bucket").isin(buckets) & F.col("term").isin(list(weights))
             )
-            .select("term", "first_doc", "docs", "tfs", "dls", "codec", ub.alias("ub"))
+            .select("term", "first_doc", "docs", "tfs", "dls", ub.alias("ub"))
             .orderBy(F.desc("ub"), "term", "first_doc")  # deterministic under ties
             .limit(n_blocks)
         )
@@ -1505,28 +1500,19 @@ class IndexReader:
         avgdls = {t: self.field_avg_dl[self._field_of(t)] for t in weights}
 
         def decode(iterator):
-            import numpy as np
-
             from ..index import codec as C
+            from .wand import block_contrib
 
             for pdf in iterator:
                 frames = []
                 for row in pdf.itertuples(index=False):
-                    docs = (
-                        C.for_decode(bytes(row.docs))
-                        if row.codec == "for"
-                        else C.delta_decode(bytes(row.docs))
-                    )
-                    tfs = C.varbyte_decode(bytes(row.tfs)).astype(np.float64)
-                    dls = C.varbyte_decode(bytes(row.dls)).astype(np.float64)
-                    t_avg = avgdls[row.term]
-                    contrib = w_map[row.term] * (
-                        (tfs * (k1 + 1.0))
-                        / (tfs + k1 * ((1.0 - b) + b * (dls / t_avg)))
+                    contrib = block_contrib(
+                        bytes(row.tfs), bytes(row.dls),
+                        w_map[row.term], avgdls[row.term], k1, b,
                     )
                     frames.append(
                         pd.DataFrame(
-                            {"doc_id": docs.astype("int64"), "contrib": contrib}
+                            {"doc_id": C.delta_decode(bytes(row.docs)), "contrib": contrib}
                         )
                     )
                 if frames:
@@ -1587,10 +1573,15 @@ class IndexReader:
         buckets = sorted({term_bucket(t) for t in weights})
 
         # partition-pruned scan: bucket prunes directories, term prunes
-        # row groups via dictionary/min-max
+        # row groups via dictionary/min-max. Only the columns the bin
+        # kernel reads are shipped to the Python workers (positions, the
+        # largest payload, never leaves the scan).
         segs = (
             self.segments.filter(
                 F.col("bucket").isin(buckets) & F.col("term").isin(list(weights))
+            )
+            .select(
+                "term", "first_doc", "last_doc", "docs", "tfs", "dls", "max_tf", "min_dl"
             )
             .withColumn(
                 "bin",

@@ -22,14 +22,20 @@ import heapq
 import numpy as np
 
 from ..index import codec
+from ..scoring import bm25_tf_norm
 
 
-def _tf_norm_ub(max_tf: float, min_dl: float, avg_dl: float, k1: float, b: float) -> float:
-    """Upper bound of tf_norm within a block: tf_norm is monotone
-    increasing in tf and decreasing in dl, so (max_tf, min_dl) bounds it.
-    Computed at query time from the CURRENT avg_dl, so block metadata
-    stays valid across incremental appends/deletes that move avg_dl."""
-    return (max_tf * (k1 + 1.0)) / (max_tf + k1 * ((1.0 - b) + b * (min_dl / avg_dl)))
+def block_contrib(
+    tfs: bytes, dls: bytes, weight: float, avg_dl: float, k1: float, b: float
+) -> np.ndarray:
+    """Per-doc BM25 contributions ``weight · tf_norm`` of one block, in
+    block order — the single tfs/dls payload decode shared by the WAND
+    cursor, the single-term path and the engine's global-θ seed. Scoring
+    goes through ``scoring.bm25_tf_norm``, so it is bitwise the oracle's
+    expression."""
+    tf = codec.varbyte_decode(tfs).astype(np.float64)
+    dl = codec.varbyte_decode(dls).astype(np.float64)
+    return weight * bm25_tf_norm(tf, dl, avg_dl, k1, b)
 
 
 class _Cursor:
@@ -58,8 +64,11 @@ class _Cursor:
         self.lo, self.hi = lo, hi
         self.avg_dl, self.k1, self.b = avg_dl, k1, b
         self.exclude = exclude
+        # tf_norm rises with tf and falls with dl, so (max_tf, min_dl)
+        # bounds it. Computed from the CURRENT avg_dl, so block metadata
+        # stays valid across appends/deletes that move avg_dl.
         for r in self.blocks:
-            r["_ub"] = weight * _tf_norm_ub(r["max_tf"], r["min_dl"], avg_dl, k1, b)
+            r["_ub"] = weight * bm25_tf_norm(r["max_tf"], r["min_dl"], avg_dl, k1, b)
         self.term_ub = max(r["_ub"] for r in self.blocks)
         self.bi = 0
         self._docs: np.ndarray | None = None
@@ -85,10 +94,7 @@ class _Cursor:
                 break
             if self.stats is not None:
                 self.stats["blocks_positioned"] = self.stats.get("blocks_positioned", 0) + 1
-            if blk.get("codec") == "for":
-                docs = codec.for_decode(blk["docs"])
-            else:
-                docs = codec.delta_decode(blk["docs"])
+            docs = codec.delta_decode(blk["docs"])
             mask = (docs >= self.lo) & (docs < self.hi)
             if self.exclude is not None and self.exclude.size:
                 mask &= ~np.isin(docs, self.exclude)
@@ -107,11 +113,9 @@ class _Cursor:
         blk = self._blk
         if self.stats is not None:
             self.stats["blocks_decoded"] = self.stats.get("blocks_decoded", 0) + 1
-        tfs = codec.varbyte_decode(blk["tfs"]).astype(np.float64)
-        dls = codec.varbyte_decode(blk["dls"]).astype(np.float64)
-        k1, b = self.k1, self.b
-        tf_norm = (tfs * (k1 + 1.0)) / (tfs + k1 * ((1.0 - b) + b * (dls / self.avg_dl)))
-        self._contrib = (self.weight * tf_norm)[self._mask]
+        self._contrib = block_contrib(
+            blk["tfs"], blk["dls"], self.weight, self.avg_dl, self.k1, self.b
+        )[self._mask]
 
     @property
     def doc(self) -> int:
@@ -178,10 +182,10 @@ def _single_term_topk(
     first block whose UB is strictly below θ (every later block's UB is
     ≤ it, and a block's docs score ≤ its UB, so nothing droppable is
     dropped; ties at θ are still evaluated for the doc_id tie-break).
-    Scores are ``weight * tf_norm`` on the same float64 path as
-    ``_Cursor._decode_payload``, so results are bitwise identical."""
+    Scores come from the same ``block_contrib`` as ``_Cursor``, so
+    results are bitwise identical."""
     for r in blocks:
-        r["_ub"] = weight * _tf_norm_ub(r["max_tf"], r["min_dl"], avg_dl, k1, b)
+        r["_ub"] = weight * bm25_tf_norm(r["max_tf"], r["min_dl"], avg_dl, k1, b)
     order = sorted(blocks, key=lambda r: (-r["_ub"], r["first_doc"]))
     theta = theta0
     cd: list[np.ndarray] = []  # candidate doc ids
@@ -207,10 +211,7 @@ def _single_term_topk(
             continue
         if stats is not None:
             stats["blocks_positioned"] = stats.get("blocks_positioned", 0) + 1
-        if blk.get("codec") == "for":
-            docs = codec.for_decode(blk["docs"])
-        else:
-            docs = codec.delta_decode(blk["docs"])
+        docs = codec.delta_decode(blk["docs"])
         mask = (docs >= lo) & (docs < hi)
         if exclude is not None and exclude.size:
             mask &= ~np.isin(docs, exclude)
@@ -218,10 +219,7 @@ def _single_term_topk(
             continue
         if stats is not None:
             stats["blocks_decoded"] = stats.get("blocks_decoded", 0) + 1
-        tfs = codec.varbyte_decode(blk["tfs"]).astype(np.float64)
-        dls = codec.varbyte_decode(blk["dls"]).astype(np.float64)
-        tf_norm = (tfs * (k1 + 1.0)) / (tfs + k1 * ((1.0 - b) + b * (dls / avg_dl)))
-        contrib = (weight * tf_norm)[mask]
+        contrib = block_contrib(blk["tfs"], blk["dls"], weight, avg_dl, k1, b)[mask]
         if theta > 0.0:
             above = contrib >= theta
             if not above.any():

@@ -1,6 +1,7 @@
-"""BM25 scalar math (k1=1.2, b=0.75) — the single definition used by the
-oracle, the exhaustive engine, and the WAND kernel. The exact
-floating-point expression SHAPE matters: all three compute
+"""BM25 math (k1=1.2, b=0.75) — the single definition used by the oracle
+and the WAND kernel (scalars or numpy arrays); the exhaustive engine's
+Spark column expression (``IndexReader._contrib_expr``) mirrors it. The
+exact floating-point expression SHAPE matters: all three compute
 ``w * ((tf*(k1+1)) / (tf + k1*((1-b) + b*(dl/avgdl))))`` with identical
 associativity and sum contributions in ascending term order, so scores
 are bitwise-reproducible across implementations and partitionings."""

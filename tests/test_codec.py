@@ -1,8 +1,10 @@
 import numpy as np
+import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from noise_spark.index import codec
+from noise_spark.index.build import _make_block_builder, term_bucket
 
 
 def test_varbyte_roundtrip_small():
@@ -32,11 +34,22 @@ def test_delta_roundtrip_property(ids):
     assert list(out) == ids
 
 
-def test_positions_roundtrip():
-    per_doc = [[0, 3, 9], [5], [], [1, 2, 3, 4, 1000]]
-    buf = codec.encode_positions(per_doc)
-    out = codec.decode_positions(buf, len(per_doc))
-    assert [list(x) for x in out] == per_doc
+@settings(max_examples=100, deadline=None)
+@given(
+    st.lists(
+        st.lists(st.integers(min_value=0, max_value=2**20), max_size=20, unique=True),
+        max_size=50,
+    )
+)
+def test_positions_roundtrip(per_doc):
+    """The build writes one ``positions_row`` per posting and concatenates
+    them into a block payload; the reader cuts it back with
+    ``split_positions`` and decodes each row with ``decode_positions_row``."""
+    per_doc = [sorted(p) for p in per_doc]
+    rows = [codec.positions_row(p) for p in per_doc]
+    split = codec.split_positions(b"".join(rows), len(rows))
+    assert split == rows
+    assert [list(codec.decode_positions_row(r)) for r in split] == per_doc
 
 
 def test_varbyte_compression_ratio():
@@ -46,23 +59,45 @@ def test_varbyte_compression_ratio():
     assert len(buf) < ids.size * 1.1
 
 
-def test_for_roundtrip_small():
-    vals = np.array([100, 101, 105, 230, 1000, 2**40], dtype=np.uint64)
-    out = codec.for_decode(codec.for_encode(vals))
-    assert list(out) == list(vals)
+@st.composite
+def _posting_lists(draw):
+    """(doc ids ≤ 2^40, tfs, dls ≥ tf, a shuffled row order)."""
+    ids = draw(
+        st.lists(st.integers(min_value=0, max_value=2**40), min_size=1, max_size=400, unique=True)
+    )
+    n = len(ids)
+    tfs = draw(st.lists(st.integers(min_value=1, max_value=300), min_size=n, max_size=n))
+    extra = draw(st.lists(st.integers(min_value=0, max_value=2**20), min_size=n, max_size=n))
+    order = draw(st.permutations(range(n)))
+    return ids, tfs, [t + x for t, x in zip(tfs, extra)], order
 
 
-@settings(max_examples=150, deadline=None)
-@given(st.lists(st.integers(min_value=0, max_value=2**50), min_size=1, max_size=200))
-def test_for_roundtrip_property(vals):
-    arr = np.array(sorted(vals), dtype=np.uint64)
-    out = codec.for_decode(codec.for_encode(arr))
-    assert list(out) == sorted(vals)
+@settings(max_examples=100, deadline=None)
+@given(_posting_lists(), st.sampled_from([1, 4, 128]))
+def test_block_builder_roundtrip_property(posting, block_size):
+    """Every block ``_make_block_builder`` emits is a slice of ONE varbyte
+    stream per column with an absolute leading docID: it must decode on
+    its own back to its slice of the sorted posting list, and its stored
+    metadata must match that slice."""
+    ids, tfs, dls, order = posting
+    pos_rows = [codec.positions_row(list(range(tf))) for tf in tfs]
+    pdf = pd.DataFrame(
+        {"doc_id": ids, "tf": tfs, "dl": dls, "positions": pos_rows}
+    ).iloc[list(order)]
+    out = _make_block_builder(block_size, 16)(("t", 3), pdf)
 
-
-def test_for_beats_varbyte_on_dense_blocks():
-    # dense docID runs: FOR bit-packs tiny relative offsets
-    ids = np.arange(10_000_000, 10_000_128, dtype=np.int64)
-    f = codec.for_encode(ids.astype(np.uint64))
-    v = codec.delta_encode(ids)
-    assert len(f) < len(v) + 16  # comparable or better incl. header
+    by_doc = sorted(zip(ids, tfs, dls, pos_rows))
+    assert len(out) == -(-len(ids) // block_size)
+    for i, blk in enumerate(out.itertuples(index=False)):
+        sl = by_doc[i * block_size : (i + 1) * block_size]
+        s_ids, s_tfs, s_dls, s_pos = map(list, zip(*sl))
+        assert list(codec.delta_decode(blk.docs)) == s_ids
+        assert list(codec.varbyte_decode(blk.tfs)) == s_tfs
+        assert list(codec.varbyte_decode(blk.dls)) == s_dls
+        assert codec.split_positions(blk.positions, len(sl)) == s_pos
+        assert (blk.term, blk.salt, blk.block_id) == ("t", 3, i)
+        assert (blk.first_doc, blk.last_doc) == (s_ids[0], s_ids[-1])
+        assert (blk.max_tf, blk.min_dl) == (max(s_tfs), min(s_dls))
+        assert (blk.tf_sum, blk.n_docs) == (sum(s_tfs), len(sl))
+        assert blk.codec == "varbyte"
+        assert blk.bucket == term_bucket("t", 16)

@@ -67,23 +67,3 @@ def test_salted_rank_identity(spark, salted_index):
                 for r in reader.search_wand(node, k=10, n_bins=bins).collect()
             ]
             assert gw == want, f"wand bins={bins}"
-
-
-def test_for_codec_rank_identity(spark, tmp_path):
-    """Frame-of-reference docID blocks must be query-identical to the
-    varbyte default on both paths."""
-    idx = str(tmp_path / "for_idx")
-    pages = generate_pages(spark, 300, seed=42, partitions=2)
-    build_index(spark, pages, idx, BuildConfig(block_size=32, doc_codec="for"))
-    reader = IndexReader(spark, idx)
-    assert reader.segments.filter(F.col("codec") != "for").count() == 0
-    docs = reader.docs.select("doc_id", "text").collect()
-    oracle = OracleIndex([(r["doc_id"], r["text"]) for r in docs])
-    for node in (
-        P.Or((P.Term("w00000"), P.Term("w00050"))),
-        P.And((P.Term("w00000"), P.Term("w00002"))),
-    ):
-        want = oracle.search(node, k=10)
-        got = [(r["doc_id"], r["score"]) for r in reader.search(node, k=10).collect()]
-        gw = [(r["doc_id"], r["score"]) for r in reader.search_wand(node, k=10, n_bins=3).collect()]
-        assert got == want and gw == want
