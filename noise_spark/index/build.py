@@ -636,6 +636,11 @@ def build_index(
         term_stats = segs.groupBy("term").agg(
             F.sum("n_docs").alias("df"), F.sum("tf_sum").alias("cf")
         )
+        # Single-consumption invariant: the observed per-field cf sums
+        # are exact only while `term_stats` is consumed by exactly ONE
+        # action — the write below — before `obs.get`. Never cache it,
+        # reuse it, or run another action on it: a second consumer
+        # would make the observed sums diverge from the written table.
         obs = Observation()
         term_stats = term_stats.observe(
             obs,

@@ -24,6 +24,8 @@ operations —
 
 from __future__ import annotations
 
+from functools import cached_property
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -89,6 +91,14 @@ def _positions_satisfy(lists, phrase: bool, window: int) -> bool:
     return False
 
 
+def _read_rows(path: str) -> list[dict]:
+    """Every row of a small committed parquet stage, read on the driver
+    with pyarrow — a metadata-sized read, not a Spark job."""
+    import pyarrow.parquet as pq
+
+    return pq.read_table(path).to_pylist()
+
+
 class IndexReader:
     """Reads a committed index snapshot and answers queries.
 
@@ -143,11 +153,14 @@ class IndexReader:
         self._term_stats_paths = paths("term_stats")
         self._segments_paths = paths("segments")
 
-        # corpus stats: per-field Σ over generation rows + delete deltas
+        # corpus stats: per-field Σ over generation rows + delete deltas.
+        # Both tables hold one row per indexed field, so they are read on
+        # the driver with pyarrow (like catalog footers): opening a
+        # reader runs no Spark job unless the index has tombstones.
         field_order: list[str] = []
         fstats: dict[str, list[int]] = {}  # field -> [n_docs, total_tokens]
         for p in paths("corpus_stats"):
-            for row in spark.read.parquet(p).orderBy("ordinal").collect():
+            for row in sorted(_read_rows(p), key=lambda r: r["ordinal"]):
                 f = row["field"]
                 if f not in fstats:
                     fstats[f] = [0, 0]
@@ -155,7 +168,7 @@ class IndexReader:
                 fstats[f][0] += row["n_docs"]
                 fstats[f][1] += row["total_tokens"]
         if "corpus_stats_delta" in stages:
-            for d in spark.read.parquet(stages["corpus_stats_delta"]["path"]).collect():
+            for d in _read_rows(stages["corpus_stats_delta"]["path"]):
                 f = d["field"]
                 if f in fstats:
                     fstats[f][0] += d["n_docs"]
@@ -463,6 +476,28 @@ class IndexReader:
             df = df.unionByName(self.spark.read.parquet(p))
         return df
 
+    # Each snapshot table is resolved ONCE per reader, on first use: a
+    # ``spark.read.parquet`` lists its directory (a job with one task
+    # per bucket dir on segments) and infers a schema (another job), so
+    # every query instead adds its filters and projections to the same
+    # relation, whose file index already holds the listing. Safe because
+    # a reader's stage paths never change under it: mutable stages are
+    # committed to fresh ``<stage>__<snap>`` dirs and compaction writes
+    # a new index dir. Lazy, not in __init__: a reader opened only for
+    # ``.fields`` (append_docs) never lists anything.
+    @cached_property
+    def _docs_table(self) -> DataFrame:
+        return self._union(self._docs_paths)
+
+    @cached_property
+    def _segments_table(self) -> DataFrame:
+        return self._union(self._segments_paths)
+
+    @cached_property
+    def _term_stats_table(self) -> DataFrame:
+        delta = [self._term_stats_delta] if self._term_stats_delta else []
+        return self._union(self._term_stats_paths + delta)
+
     # below this many tombstones the anti-join side is explicitly
     # broadcast (a doc_id column of 5M longs is ~40 MB serialized —
     # comfortably a map-side hash filter, no shuffle of the decoded
@@ -514,11 +549,11 @@ class IndexReader:
 
     @property
     def docs(self) -> DataFrame:
-        return self._minus_tombstones(self._union(self._docs_paths))
+        return self._minus_tombstones(self._docs_table)
 
     @property
     def segments(self) -> DataFrame:
-        return self._union(self._segments_paths)
+        return self._segments_table
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
         """Doc frequencies, cached per reader: a reader pins one snapshot,
@@ -528,9 +563,7 @@ class IndexReader:
             return {}
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
-            stats = self._union(self._term_stats_paths)
-            if self._term_stats_delta:
-                stats = stats.unionByName(self.spark.read.parquet(self._term_stats_delta))
+            stats = self._term_stats_table
             # no groupBy exchange: each term has at most one stats row
             # per generation (+ one delta row), so the filtered scan
             # collects ≤ terms × generations rows and the integer sum
@@ -887,6 +920,15 @@ class IndexReader:
         )
 
     @staticmethod
+    def _or_of_terms(node: P.Node) -> bool:
+        """Only Or and Term nodes: every posting of its keys matches."""
+        if isinstance(node, P.Term):
+            return True
+        return isinstance(node, P.Or) and all(
+            IndexReader._or_of_terms(c) for c in node.children
+        )
+
+    @staticmethod
     def _contains_not(node: P.Node) -> bool:
         if isinstance(node, P.Not):
             return True
@@ -961,24 +1003,26 @@ class IndexReader:
                     self._contrib_expr(wmap, avgdl_map).alias("score"),
                 )
             )
+        score = F.aggregate(
+            F.array_sort(F.collect_list(F.struct("term", "contrib"))),
+            F.lit(0.0),
+            lambda acc, x: acc + x["contrib"],
+        ).alias("score")
+        scan = self.postings_for(keys).withColumn(
+            "contrib", self._contrib_expr(wmap, avgdl_map)
+        )
+        if self._or_of_terms(node):
+            # a disjunction of positive terms matches every doc the scan
+            # reaches: no bit column, no mask aggregate, no filter
+            return scan.groupBy("doc_id").agg(score)
         match_expr = self._tree_expr(node, F.col("_mask"), qbits)
-        scored = (
-            self.postings_for(keys)
-            .withColumn("contrib", self._contrib_expr(wmap, avgdl_map))
-            .withColumn("bit", self._lit_map(qbits)[F.col("term")])
+        return (
+            scan.withColumn("bit", self._lit_map(qbits)[F.col("term")])
             .groupBy("doc_id")
-            .agg(
-                F.aggregate(
-                    F.array_sort(F.collect_list(F.struct("term", "contrib"))),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["contrib"],
-                ).alias("score"),
-                F.bit_or("bit").alias("_mask"),
-            )
+            .agg(score, F.bit_or("bit").alias("_mask"))
             .filter(match_expr)
             .select("doc_id", "score")
         )
-        return scored
 
     def _positional_scored(self, node: P.Node) -> DataFrame:
         """Single-scan scored set for a top-level Phrase/Proximity: ONE
@@ -1646,10 +1690,10 @@ class IndexReader:
                 }
             )
 
-        def run_bin(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def run_bin(key, pdf):
             return _run_bin(key[0], pdf, None)
 
-        def run_bin_with_tombs(key, pdf: pd.DataFrame, tomb: pd.DataFrame) -> pd.DataFrame:
+        def run_bin_with_tombs(key, pdf, tomb):
             import numpy as np
 
             excl = (
@@ -1674,7 +1718,7 @@ class IndexReader:
             # ~2.5 GB for 2×10⁹ deletes over 10¹⁰ docs, vs ~30 GB of
             # rows); each task expands only its own docID range's mask
             # words to the exclude array (index/bitmaps.py layout)
-            def run_bin_with_masks(key, pdf: pd.DataFrame, masks: pd.DataFrame) -> pd.DataFrame:
+            def run_bin_with_masks(key, pdf, masks):
                 import numpy as np
 
                 lo, hi = key[0] * bw, (key[0] + 1) * bw

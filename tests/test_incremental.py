@@ -422,3 +422,41 @@ def test_duplicate_and_null_urls_fail_fast(spark, tmp_path):
             spark, nulled, str(tmp_path / "nul"),
             BuildConfig(analyzer="whitespace", block_size=64),
         )
+
+
+def test_open_reader_keeps_its_snapshot_across_append(spark, tmp_path):
+    """A reader resolves its snapshot's tables once and reuses them, so
+    an append committed after it has answered a query must not leak
+    into it: the same n_docs, top-k and dfs as before. A reader opened
+    after the commit sees the appended docs."""
+    from pyspark.sql import functions as F
+
+    idx = str(tmp_path / "idx")
+    build_index(
+        spark, generate_pages(spark, 150, seed=42, partitions=2), idx, BuildConfig(block_size=64)
+    )
+    old = IndexReader(spark, idx)
+    flat = P.Or((P.Term("w00050"), P.Term("w00007")))
+
+    def answers(reader):
+        return (
+            reader.n_docs,
+            reader.docs.count(),
+            [tuple(r) for r in reader.query(flat, k=10).collect()],
+            [tuple(r) for r in reader.search(QUERIES[3], k=10).collect()],
+            reader.term_dfs(["w00000", "w00050", "w00007"]),
+        )
+
+    before = answers(old)
+    new_pages = generate_pages(spark, 40, seed=777, partitions=2).withColumn(
+        "url", F.concat(F.lit("https://delta."), F.col("url"))
+    )
+    append_docs(spark, idx, new_pages, BuildConfig(block_size=64))
+    old._df_cache.clear()  # re-query dfs through the pinned stats relation
+    assert answers(old) == before
+    fresh = IndexReader(spark, idx)
+    assert fresh.n_docs == 190
+    assert fresh.docs.count() == 190
+    grown = fresh.term_dfs(list(before[4]))
+    assert sum(grown.values()) > sum(before[4].values())
+    _assert_identical(fresh, _oracle_for(spark, fresh))

@@ -243,3 +243,68 @@ def test_return_payload_joins_after_limit(plan_reader):
     )
     p2 = df2._jdf.queryExecution().optimizedPlan().toString()
     assert "GlobalLimit" not in p2
+
+
+def test_flat_or_scores_without_mask(plan_reader):
+    """A disjunction of positive terms matches every posting its scan
+    reaches, so the scored aggregate carries no bit column, no
+    ``bit_or`` mask and no Filter on top (q_or2). The only Filter left
+    is the scan's own pushed term lookup, below the exchange."""
+    from noise_spark.query import plan as P
+
+    df = plan_reader.search(P.Or((P.Term("w00001"), P.Term("w00002"))), k=5)
+    physical = df._jdf.queryExecution().executedPlan().toString()
+    assert "bit_or" not in physical
+    above_scan = physical.split("Exchange", 1)[0]
+    assert "Filter" not in above_scan, physical
+
+
+def test_reader_reuses_snapshot_relations(plan_reader, monkeypatch):
+    """After one warm-up query, no query path reads parquet again: the
+    docs, segments and term_stats relations (and their directory
+    listings) are resolved once per reader, not once per query."""
+    from pyspark.sql import DataFrameReader
+
+    from noise_spark.query import plan as P
+
+    reader = IndexReader(plan_reader.spark, plan_reader.cat.root)
+    reader.search(P.Term("w00001"), k=3).collect()
+    reader.docs.select("doc_id").limit(1).collect()
+    calls = []
+    real = DataFrameReader.parquet
+
+    def counting(self, *paths, **kw):
+        calls.append(paths)
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    reader.query(P.Or((P.Term("w00002"), P.Term("w00003"))), k=3).collect()
+    assert calls == [], "WAND query"
+    reader.search(P.Not(P.Term("w00001"), P.Term("w00004")), k=3).collect()
+    assert calls == [], "exhaustive search"
+    assert reader.term_dfs(["w00005", "w00006"])
+    assert calls == [], "term_dfs of new terms"
+    reader.search_many(
+        {
+            "a": P.Or((P.Term("w00007"), P.Term("w00001"))),
+            "b": P.Phrase(("w00001", "w00002")),
+        },
+        k=3,
+    ).collect()
+    assert calls == [], "search_many"
+
+
+def test_reader_open_runs_no_spark_job(plan_reader):
+    """Opening a reader on an index without tombstones runs no Spark
+    job: corpus stats are read on the driver and every table relation
+    is resolved lazily, on first use."""
+    sc = plan_reader.spark.sparkContext
+    group = "test_reader_open_runs_no_spark_job"
+    sc.setJobGroup(group, "reader open")
+    try:
+        reader = IndexReader(plan_reader.spark, plan_reader.cat.root)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert reader.n_docs == 300
