@@ -268,7 +268,7 @@ def _make_extractor(id_cols: list, extra: list):
 
 
 def _make_block_builder(block_size: int, n_buckets: int):
-    def build_blocks(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build_blocks(key, pdf):
         term, salt = key
         pdf = pdf.sort_values("doc_id")
         doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)

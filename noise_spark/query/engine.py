@@ -6,20 +6,27 @@ operations —
 - term postings scan  → parquet read filtered by ``term`` (predicate
   pushdown + dictionary/min-max pruning; segments additionally prune by
   the deterministic term bucket partition)
-- AND                 → match-set inner joins (semi)
-- OR                  → match-set union
-- NOT                 → left_anti join
-- phrase / proximity  → per-doc position verification in an
-  Arrow-batched grouped-map UDF (positions payload decoded per doc)
+- match sets          → AND = semi joins, OR = union, NOT = left_anti
+  join (filter-only plans and trees mixing terms with field predicates)
+- scored queries      → ONE lowering per plan shape, shared by
+  :meth:`IndexReader.search` (a one-query batch) and
+  :meth:`IndexReader.search_many` (the whole batch): ``_tree_scan``
+  evaluates term-only boolean trees as bit-tests over a per-doc
+  matched-term mask in one segment decode, ``_positional_scan`` scores
+  top-level phrase / proximity in one positional decode plus one
+  Arrow-batched position verify. Both return an unordered
+  ``(query_id, doc_id, score)`` set.
 - scoring             → BM25 contributions as JVM-side column
-  expressions; per-doc summation in ASCENDING TERM ORDER via
+  expressions built by :func:`noise_spark.scoring.bm25_tf_norm`; per-doc
+  summation in ASCENDING TERM ORDER via
   ``aggregate(array_sort(collect_list(...)))`` so floating-point results
   are bitwise-reproducible across partitionings and parallelism levels
   (and bitwise-comparable to the pure-Python oracle)
 - top-k               → ``orderBy(score desc, doc_id asc).limit(k)``,
   which Spark executes as TakeOrderedAndProject (per-partition top-k +
   driver merge; the reference's incremental sort/merge buffer,
-  ``src/query.rs:511-553``)
+  ``src/query.rs:511-553``); ``search_many`` takes a two-stage window
+  top-k per query instead
 """
 
 from __future__ import annotations
@@ -33,16 +40,15 @@ from pyspark.sql import types as T
 
 from .. import BM25_B, BM25_K1
 from ..index.catalog import IndexCatalog
-from ..scoring import bm25_idf
+from ..scoring import bm25_idf, bm25_tf_norm
 from . import plan as P
 
 
 def _positions_satisfy(lists, phrase: bool, window: int) -> bool:
     """Does one doc's set of per-term position lists satisfy the
     pattern? ``lists`` holds one sorted numpy int array per query term
-    (in query order). Shared by the per-query positional verify and the
-    batched shared-scan verify so both paths are semantically one
-    implementation."""
+    (in query order). The one phrase/proximity matcher: the positional
+    scan's verify and the element-word verify both call it."""
     import numpy as np
 
     if phrase:
@@ -317,6 +323,8 @@ class IndexReader:
         def make_udf():
             import json as _json
 
+            import numpy as np
+
             from ..analysis.tokenizer import analyze
 
             def toks_of(x):
@@ -325,36 +333,15 @@ class IndexReader:
                 return None
 
             def word_hit(toks, terms, window):
+                # a word, phrase (window None) or proximity over one
+                # element's token positions
                 if toks is None:
                     return False
-                if len(terms) == 1 and window is None:
-                    return terms[0] in toks
-                positions = {t: [i for i, w in enumerate(toks) if w == t] for t in terms}
-                if any(not p for p in positions.values()):
-                    return False
-                if window is None:  # phrase: consecutive run
-                    n = len(terms)
-                    return any(
-                        toks[i : i + n] == list(terms)
-                        for i in range(len(toks) - n + 1)
-                    )
-                # proximity: some choice of one position per term spans <= window
-                tagged = sorted(
-                    (p, t) for t, ps in positions.items() for p in ps
-                )
-                need = set(terms)
-                lo = 0
-                seen: dict = {}
-                for hi in range(len(tagged)):
-                    seen[tagged[hi][1]] = seen.get(tagged[hi][1], 0) + 1
-                    while tagged[hi][0] - tagged[lo][0] > window:
-                        seen[tagged[lo][1]] -= 1
-                        if not seen[tagged[lo][1]]:
-                            del seen[tagged[lo][1]]
-                        lo += 1
-                    if len(seen) == len(need):
-                        return True
-                return False
+                at: dict[str, list[int]] = {}
+                for i, w in enumerate(toks):
+                    at.setdefault(w, []).append(i)
+                lists = [np.asarray(at.get(t, ()), dtype=np.int64) for t in terms]
+                return _positions_satisfy(lists, window is None, window or 0)
 
             def ev(t, toks):
                 if t[0] == "word":
@@ -469,6 +456,12 @@ class IndexReader:
         from ..index.build import FIELD_SEP
 
         return key.split(FIELD_SEP, 1)[0] if self.scoped else self.default_field
+
+    def _avgdl(self, key: str) -> float:
+        """The avgdl of a key's field. A dead key (the shadow of an
+        unknown schemaless field, see :meth:`_key`) has no postings, so
+        its value is never used: 0.0."""
+        return self.field_avg_dl.get(self._field_of(key), 0.0)
 
     def _union(self, paths: list[str]) -> DataFrame:
         df = self.spark.read.parquet(paths[0])
@@ -790,74 +783,34 @@ class IndexReader:
         elif self.has_positions:
             cand = self._positional_match(keys, phrase=True)
         else:
-            uniq = sorted(set(keys))
-            cand = (
-                self.postings_for(uniq)
-                .groupBy("doc_id")
-                .agg(F.count("*").alias("n"))
-                .filter(F.col("n") == len(uniq))
-                .select("doc_id")
-            )
+            cand = self._match_set(P.And(tuple(P.Term(t, field="text") for t in toks)))
         return (
             self.docs.join(cand, "doc_id", "left_semi")
             .filter(F.col("text") == node.literal)
             .select("doc_id")
         )
 
-    def _positional_postings(self, terms: list[str]) -> DataFrame:
-        """(term, doc_id, positions varbyte) — bucket-pruned segment
-        decode (positions re-sliced per doc, not re-encoded)."""
-        return self._decode_segments(terms, with_positions=True).select(
-            "term", "doc_id", "positions"
-        )
-
     def _positional_match(self, terms: list[str], phrase: bool, window: int = 0) -> DataFrame:
         """Docs where ``terms`` occur consecutively (phrase) or within an
-        N-word window (proximity). Candidate docs (containing all terms)
-        are found relationally over the bucket-pruned segments; position
-        verification is one Arrow-batched grouped-map over the per-doc
-        position lists."""
+        N-word window (proximity): the positional scan with every weight
+        0.0, keeping only the doc ids."""
         if not self.has_positions:
             raise ValueError(
                 "index was built with store_positions=False — phrase/"
                 "proximity queries need position payloads (rebuild with "
                 "BuildConfig(store_positions=True))"
             )
-        n_terms = len(set(terms))
-        posts = self._positional_postings(sorted(set(terms)))
-        grouped = (
-            posts.groupBy("doc_id")
-            .agg(
-                F.count("*").alias("n"),
-                F.map_from_entries(
-                    F.collect_list(F.struct("term", "positions"))
-                ).alias("posmap"),
-            )
-            .filter(F.col("n") == n_terms)
-        )
-        ordered_terms = list(terms)
-        w = window
+        spec = (list(terms), phrase, window, dict.fromkeys(terms, 0.0))
+        return self._positional_scan({"q": spec}).select("doc_id")
 
-        def verify(iterator):
-            from ..index.codec import decode_positions_row
-
-            for pdf in iterator:
-                keep = []
-                for doc_id, posmap in zip(pdf["doc_id"], pdf["posmap"]):
-                    lists = [decode_positions_row(bytes(posmap[t])) for t in ordered_terms]
-                    if _positions_satisfy(lists, phrase, w):
-                        keep.append(doc_id)
-                yield pd.DataFrame({"doc_id": pd.Series(keep, dtype="int64")})
-
-        return grouped.mapInPandas(verify, schema=T.StructType([T.StructField("doc_id", T.LongType(), False)]))
-
-    # -- term-only boolean trees (single-scan lowering) -----------------------
+    # -- scored lowerings, shared by search and search_many ------------------
     # A term-only tree (Term / Or / And / Not nested to any depth) needs
-    # exactly ONE bucket-pruned segment decode: per-(doc) matched-term
-    # BITMASK via bit_or + JVM long bit-tests for the boolean, and the
-    # bitwise-pinned BM25 sum in the same aggregation. This replaces the
-    # old match-set-join lowering (AND = 2 scans + join, NOT = 3 scans)
-    # — guide §2.4: remove shuffles/scans outright.
+    # exactly ONE bucket-pruned segment decode: per-(query, doc)
+    # matched-term BITMASK via bit_or + JVM long bit-tests for the
+    # boolean, and the bitwise-pinned BM25 sum in the same aggregation
+    # (no match-set joins: AND would be 2 scans + join, NOT 3 scans). A
+    # top-level phrase/proximity needs ONE positional decode. Each
+    # builder takes a batch of queries; search passes a batch of one.
 
     @staticmethod
     def _term_only(node: P.Node) -> bool:
@@ -945,137 +898,168 @@ class IndexReader:
         downstream float arithmetic is bitwise unchanged)."""
         return F.create_map(*[F.lit(x) for kv in d.items() for x in kv])
 
-    def _contrib_expr(self, wmap: dict[str, float], avgdl_map: dict[str, float]):
-        """Per-posting BM25 contribution with weights/avgdl as literal
-        maps keyed by term. Parenthesization mirrors oracle.bm25_tf_norm
-        exactly: w * ((tf*(k1+1)) / (tf + k1*((1-b) + b*(dl/avgdl))))."""
-        k1, b = self.k1, self.b
-        w = self._lit_map(wmap)[F.col("term")]
-        avgdl = self._lit_map(avgdl_map)[F.col("term")]
-        return w * (
-            (F.col("tf") * F.lit(k1 + 1.0))
-            / (
-                F.col("tf")
-                + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * (F.col("dl") / avgdl))
-            )
-        )
+    def _contrib(self, w, avgdl):
+        """Per-posting BM25 contribution over the scan's ``tf``/``dl``:
+        :func:`bm25_tf_norm` evaluated on Columns (Spark only commutes
+        the ``*``/``+`` operands, exact in IEEE), times the weight."""
+        return w * bm25_tf_norm(F.col("tf"), F.col("dl"), avgdl, self.k1, self.b)
 
-    def _empty_scored(self) -> DataFrame:
-        return self.spark.createDataFrame([], "doc_id long, score double")
-
-    def _tree_scored(self, node: P.Node) -> DataFrame | None:
-        """Single-scan scored set for a term-only tree (<63 distinct
-        keys — one signed long of query-local bits), or None when the
-        tree shape doesn't qualify. Output is bitwise-identical to the
-        old multi-scan lowering: the score aggregates the SAME
-        ascending-term struct list (negative-arm marker rows carry
-        w=0.0, and adding +0.0 at any position of the running sum is an
-        IEEE identity), and the match set is the same boolean over the
-        same postings."""
-        if not self._term_only(node):
-            return None
-        keys = sorted(self._tree_keys(node))
-        if len(keys) >= 63:
-            return None
-        boosts = self._term_boosts(node)
-        dfs = self.term_dfs(sorted(boosts))
-        if not any(t in dfs for t in boosts):
-            # every positive-skeleton term is absent (df=0): no doc can
-            # satisfy the tree (a term-only match always requires at
-            # least one positive term present)
-            return self._empty_scored()
-        qbits = {t: 1 << i for i, t in enumerate(keys)}
-        wmap = {
-            t: (bm25_idf(self.n_docs, dfs[t]) * boosts[t] if t in dfs else 0.0)
-            for t in keys
-        }
-        avgdl_map = {t: self.field_avg_dl[self._field_of(t)] for t in keys}
-        if len(keys) == 1 and not self._contains_not(node):
-            # one distinct key and no negation: the scan already holds
-            # exactly one row per matching doc (tf is aggregated at
-            # build), so the score IS the single contribution — no
-            # groupBy, no shuffle, no mask. Bitwise identical: the
-            # general path's fold is 0.0 + contrib, an IEEE identity.
-            return (
-                self.postings_for(keys)
-                .select(
-                    "doc_id",
-                    self._contrib_expr(wmap, avgdl_map).alias("score"),
-                )
-            )
-        score = F.aggregate(
+    @staticmethod
+    def _score_sum():
+        """A group's ``contrib`` rows summed in ascending term order, so
+        the float score is bitwise independent of partitioning (and
+        equal to the oracle's)."""
+        return F.aggregate(
             F.array_sort(F.collect_list(F.struct("term", "contrib"))),
             F.lit(0.0),
             lambda acc, x: acc + x["contrib"],
         ).alias("score")
-        scan = self.postings_for(keys).withColumn(
-            "contrib", self._contrib_expr(wmap, avgdl_map)
+
+    @staticmethod
+    def _fan_out(scan: DataFrame, by_term: dict[str, list[tuple]], fields) -> DataFrame:
+        """One row per (posting, query using its term), carrying that
+        query's ``fields`` (``query_id`` first). The per-query values are
+        driver-known, so they ship as a literal map term →
+        array<struct> and an inner explode does the fan-out — no lookup
+        table, no join."""
+        casts = {"query_id": "string", "w": "double", "avgdl": "double", "bit": "long"}
+        m = F.create_map(
+            *[
+                x
+                for t, rows in by_term.items()
+                for x in (
+                    F.lit(t),
+                    F.array(
+                        *[
+                            F.struct(
+                                *[F.lit(v).cast(casts[f]).alias(f) for f, v in zip(fields, r)]
+                            )
+                            for r in rows
+                        ]
+                    ),
+                )
+            ]
         )
-        if self._or_of_terms(node):
-            # a disjunction of positive terms matches every doc the scan
-            # reaches: no bit column, no mask aggregate, no filter
-            return scan.groupBy("doc_id").agg(score)
-        match_expr = self._tree_expr(node, F.col("_mask"), qbits)
-        return (
-            scan.withColumn("bit", self._lit_map(qbits)[F.col("term")])
-            .groupBy("doc_id")
-            .agg(score, F.bit_or("bit").alias("_mask"))
-            .filter(match_expr)
-            .select("doc_id", "score")
+        return scan.withColumn("_q", F.explode(m[F.col("term")])).select(
+            *scan.columns, *[F.col(f"_q.{f}").alias(f) for f in fields]
         )
 
-    def _positional_scored(self, node: P.Node) -> DataFrame:
-        """Single-scan scored set for a top-level Phrase/Proximity: ONE
-        positional segment decode whose groupBy computes the
-        bitwise-pinned BM25 sum AND collects the per-term position
-        payloads; candidates (all distinct terms present) then take one
-        Arrow-batched pattern verify. Replaces the old two-scan shape
-        (scoring scan + positional-match scan + join)."""
-        boosts = self._term_boosts(node)
-        dfs = self.term_dfs(sorted(boosts))
-        if any(t not in dfs for t in boosts):
-            # an absent term: the pattern can match nothing
+    def _empty_scored(self) -> DataFrame:
+        return self.spark.createDataFrame([], "query_id string, doc_id long, score double")
+
+    def _tree_shaped(self, node: P.Node) -> bool:
+        """A term-only tree that fits one signed long of query-local bits."""
+        return self._term_only(node) and len(self._tree_keys(node)) < 63
+
+    def _tree_scan(self, trees: dict[str, P.Node]) -> DataFrame:
+        """Scored ``(query_id, doc_id, score)`` of a batch of term-only
+        trees (:meth:`_tree_shaped`): ONE bucket-pruned decode over the
+        union of their keys, fanned out per query, ONE groupBy. Each
+        tree's boolean is long bit-tests over the ``bit_or`` of its
+        matched-term bits; negative-arm keys join the scan as marker rows
+        with w=0.0 (adding +0.0 to the running sum is an IEEE identity).
+        Shortcuts, taken when the whole batch allows them: one key and no
+        NOT per tree → one row per (query, doc) since tf is aggregated at
+        build, so the score IS the contribution (the fold would add it to
+        0.0) and no aggregate runs; only Or of Terms → every reached doc
+        matches, no bit column or mask."""
+        dfs = self.term_dfs(
+            sorted({t for node in trees.values() for t in self._term_boosts(node)})
+        )
+        by_term: dict[str, list[tuple]] = {}
+        match = None
+        single = flat_or = True
+        for qid, node in trees.items():
+            boosts = self._term_boosts(node)
+            if not any(t in dfs for t in boosts):
+                # every positive term is absent (df=0): no doc can match
+                continue
+            keys = sorted(self._tree_keys(node))
+            qbits = {t: 1 << i for i, t in enumerate(keys)}
+            for t in keys:
+                w = bm25_idf(self.n_docs, dfs[t]) * boosts[t] if t in boosts and t in dfs else 0.0
+                by_term.setdefault(t, []).append((qid, w, self._avgdl(t), qbits[t]))
+            single &= len(keys) == 1 and not self._contains_not(node)
+            flat_or &= self._or_of_terms(node)
+            e = (F.col("query_id") == qid) & self._tree_expr(node, F.col("_mask"), qbits)
+            match = e if match is None else match | e
+        if not by_term:
             return self._empty_scored()
-        keys = [self._key(t, node.field) for t in node.terms]
-        nt = len(boosts)
-        wmap = {t: bm25_idf(self.n_docs, dfs[t]) * boosts[t] for t in boosts}
-        avgdl_map = {t: self.field_avg_dl[self._field_of(t)] for t in boosts}
-        is_phrase = isinstance(node, P.Phrase)
-        window = getattr(node, "window", 0)
+        scan = self._fan_out(
+            self.postings_for(sorted(by_term)), by_term, ("query_id", "w", "avgdl", "bit")
+        ).withColumn("contrib", self._contrib(F.col("w"), F.col("avgdl")))
+        if single:
+            return scan.select("query_id", "doc_id", F.col("contrib").alias("score"))
+        if flat_or:
+            return scan.groupBy("query_id", "doc_id").agg(self._score_sum())
+        return (
+            scan.groupBy("query_id", "doc_id")
+            .agg(self._score_sum(), F.bit_or("bit").alias("_mask"))
+            .filter(match)
+            .select("query_id", "doc_id", "score")
+        )
+
+    def _positional_spec(self, node: P.Node, dfs: dict[str, int]):
+        """``(keys in query order, is_phrase, window, weights)`` of a
+        Phrase/Proximity for :meth:`_positional_scan`, or None when a
+        term is absent (the pattern can match nothing)."""
+        boosts = self._term_boosts(node)
+        if any(t not in dfs for t in boosts):
+            return None
+        return (
+            [self._key(t, node.field) for t in node.terms],
+            isinstance(node, P.Phrase),
+            getattr(node, "window", 0),
+            {t: bm25_idf(self.n_docs, dfs[t]) * boosts[t] for t in boosts},
+        )
+
+    def _positional_scan(self, specs: dict[str, tuple]) -> DataFrame:
+        """Scored ``(query_id, doc_id, score)`` of a batch of
+        phrase/proximity patterns (``query_id →`` :meth:`_positional_spec`):
+        ONE positional decode over the union of their terms, fanned out
+        per query; the groupBy sums the score and collects the per-term
+        position payloads, and docs holding every distinct term take ONE
+        Arrow-batched verify of their query's pattern."""
+        by_term: dict[str, list[tuple]] = {}
+        for qid, (_, _, _, weights) in specs.items():
+            for t, w in weights.items():
+                by_term.setdefault(t, []).append((qid, w, self._avgdl(t)))
+        n_terms = {qid: len(spec[3]) for qid, spec in specs.items()}
         grouped = (
-            self._decode_segments(sorted(set(keys)), with_positions=True)
-            .withColumn("contrib", self._contrib_expr(wmap, avgdl_map))
-            .groupBy("doc_id")
+            self._fan_out(
+                self._decode_segments(sorted(by_term), with_positions=True),
+                by_term,
+                ("query_id", "w", "avgdl"),
+            )
+            .withColumn("contrib", self._contrib(F.col("w"), F.col("avgdl")))
+            .groupBy("query_id", "doc_id")
             .agg(
-                F.aggregate(
-                    F.array_sort(F.collect_list(F.struct("term", "contrib"))),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["contrib"],
-                ).alias("score"),
+                self._score_sum(),
                 F.count("*").alias("_nm"),
                 F.map_from_entries(
                     F.collect_list(F.struct("term", "positions"))
                 ).alias("posmap"),
             )
-            .filter(F.col("_nm") == nt)
+            .filter(F.col("_nm") == self._lit_map(n_terms)[F.col("query_id")])
+            .select("query_id", "doc_id", "score", "posmap")
         )
+        patterns = {qid: spec[:3] for qid, spec in specs.items()}
 
         def verify(iterator):
             from ..index.codec import decode_positions_row
 
             for pdf in iterator:
-                keep: list[tuple] = []
-                for doc_id, score, posmap in zip(
-                    pdf["doc_id"], pdf["score"], pdf["posmap"]
-                ):
-                    lists = [decode_positions_row(bytes(posmap[t])) for t in keys]
+                keep = []
+                for row in zip(pdf["query_id"], pdf["doc_id"], pdf["score"], pdf["posmap"]):
+                    keys, is_phrase, window = patterns[row[0]]
+                    lists = [decode_positions_row(bytes(row[3][t])) for t in keys]
                     if _positions_satisfy(lists, is_phrase, window):
-                        keep.append((doc_id, score))
-                yield pd.DataFrame(keep, columns=["doc_id", "score"]).astype(
+                        keep.append(row[:3])
+                yield pd.DataFrame(keep, columns=["query_id", "doc_id", "score"]).astype(
                     {"doc_id": "int64", "score": "float64"}
                 )
 
-        return grouped.mapInPandas(verify, schema="doc_id long, score double")
+        return grouped.mapInPandas(verify, schema="query_id string, doc_id long, score double")
 
     # -- scoring -------------------------------------------------------------------
     def _term_boosts(self, node: P.Node) -> dict[str, float]:
@@ -1115,23 +1099,18 @@ class IndexReader:
         shaping the candidate set."""
         if isinstance(node, (P.ExactMatch, P.FieldEq, P.FieldRange, P.AllDocs, P.Bind, P.BboxOverlap, P.ElemWord, P.ElemWordAll)) or not self._term_boosts(node):
             return self._match_set(node).withColumn("score", F.lit(1.0))
-        # single-scan lowerings first: a term-only tree becomes a bitmask
-        # boolean over ONE bucket-pruned decode (instead of match-set
-        # joins of per-arm scans), and a top-level phrase/proximity
-        # folds scoring + position verify into ONE positional decode
-        tree_plan = self._tree_scored(node)
-        if tree_plan is not None:
-            return tree_plan
-        if isinstance(node, (P.Phrase, P.Proximity)) and self.has_positions:
-            return self._positional_scored(node)
+        # a one-query batch through the shared lowerings
+        if self._tree_shaped(node):
+            return self._tree_scan({"q": node}).select("doc_id", "score")
         boosts = self._term_boosts(node)
         terms = sorted(boosts)
         dfs = self.term_dfs(terms)
-        weights = [
-            (t, bm25_idf(self.n_docs, dfs[t]) * boosts[t], self.field_avg_dl[self._field_of(t)])
-            for t in terms
-            if t in dfs
-        ]
+        if isinstance(node, (P.Phrase, P.Proximity)) and self.has_positions:
+            spec = self._positional_spec(node, dfs)
+            if spec is None:
+                return self._empty_scored().select("doc_id", "score")
+            return self._positional_scan({"q": spec}).select("doc_id", "score")
+        weights = {t: bm25_idf(self.n_docs, dfs[t]) * boosts[t] for t in terms if t in dfs}
         if not weights:
             # every scoring term is absent from the corpus (df=0): no
             # BM25 mass anywhere, but a doc can still match through a
@@ -1141,42 +1120,31 @@ class IndexReader:
             return self._match_set(node).withColumn(
                 "score", F.lit(0.0).cast("double")
             )
-        # weights/avgdl as literal maps — no per-query lookup-table
-        # createDataFrame + broadcast join (identical doubles, so the
-        # float sum is bitwise unchanged); avgdl is per-term (= the
-        # term's FIELD average length)
+        avgdls = {t: self.field_avg_dl[self._field_of(t)] for t in weights}
         scored = (
-            self.postings_for([t for t, _, _ in weights])
+            self.postings_for(list(weights))
             .withColumn(
                 "contrib",
-                self._contrib_expr(
-                    {t: w for t, w, _ in weights}, {t: a for t, _, a in weights}
+                self._contrib(
+                    self._lit_map(weights)[F.col("term")],
+                    self._lit_map(avgdls)[F.col("term")],
                 ),
             )
             .groupBy("doc_id")
-            .agg(
-                F.aggregate(
-                    F.array_sort(F.collect_list(F.struct("term", "contrib"))),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["contrib"],
-                ).alias("score")
-            )
+            .agg(self._score_sum())
         )
-        needs_filter = not (
-            isinstance(node, P.Or) and all(isinstance(c, P.Term) for c in node.children)
+        if self._or_of_terms(node):
+            return scored
+        # LEFT join from the match set (not semi): a doc can match
+        # through a non-term arm (e.g. `a || !b`, a field predicate arm)
+        # while containing no scoring term at all — it belongs in the
+        # result with score 0.0 (binary arms don't contribute BM25 mass;
+        # SURVEY §2.4's scoring replacement)
+        return (
+            self._match_set(node)
+            .join(scored, "doc_id", "left")
+            .na.fill({"score": 0.0})
         )
-        if needs_filter:
-            # LEFT join from the match set (not semi): a doc can match
-            # through a non-term arm (e.g. `a || !b`, a field predicate
-            # arm) while containing no scoring term at all — it belongs
-            # in the result with score 0.0 (binary arms don't contribute
-            # BM25 mass; SURVEY §2.4's scoring replacement)
-            scored = (
-                self._match_set(node)
-                .join(scored, "doc_id", "left")
-                .na.fill({"score": 0.0})
-            )
-        return scored
 
     def search(self, node: P.Node, k: int = 10) -> DataFrame:
         """Top-k → DataFrame(doc_id, score) ordered by (score desc,
@@ -1190,272 +1158,43 @@ class IndexReader:
         )
 
     def search_many(self, queries: dict[str, P.Node], k: int = 10) -> DataFrame:
-        """A whole query set as ONE Spark action with a SHARED segment
-        scan: every TERM-ONLY boolean tree (Term / Or / And / Not,
-        nested to any depth) reads from ONE bucket-pruned postings
-        decode over the union of all trees' terms, tagged per query by
-        a broadcast (query_id, term, weight) table — segments shared by
-        several queries are decoded once, and the whole set is one scan
-        + one aggregation instead of Q independent scans inside the
-        action (r4 verdict item 6). Each tree's match semantics lower
-        to long bit-tests over a per-(query, doc) matched-term BITMASK
-        (every tree key gets a query-local bit; ``bit_or(bit)`` in the
-        shared groupBy is the exact matched set), so nested shapes like
-        ``And(Or(a,b), Not(c,d))`` need no fallback and flat arms
-        collapse to a single mask comparison; negative-arm terms join
-        the scan as weightless marker rows (no BM25 mass). Trees with
-        ≥63 distinct keys (beyond one long) fall back to per-query
-        plans. Top-level phrase / proximity queries ride a
-        SECOND shared scan — ONE positional segment decode over the
-        union of their terms — whose groupBy carries the posmap for
-        pattern verification AND the bitwise-pinned BM25 sum in the
-        same aggregation; one Arrow-batched verify then filters every
-        positional query at once. Remaining plans (positional inside
-        boolean trees, field predicates, exact match) fall back to
-        their per-query plans unioned into the same action.
+        """A whole query set as ONE Spark action. Queries are grouped by
+        shape and each group runs through the same lowering
+        :meth:`search` uses, once for the whole group: every term-only
+        tree shares ONE :meth:`_tree_scan` (segments read by several
+        queries decode once), every top-level phrase / proximity shares
+        ONE :meth:`_positional_scan`. Remaining plans (positional inside
+        boolean trees, field predicates, exact match) run their
+        per-query :meth:`search` inside the same action.
         Returns DataFrame(query_id, doc_id, score) with each query's
         top-k (score desc, doc_id tiebreak), rank-identical to
-        per-query :meth:`search` — the per-(query,doc) score uses the
-        IDENTICAL ascending-term ``aggregate(array_sort(...))`` sum
-        expression, so floats match bitwise."""
+        per-query :meth:`search` — bitwise, since both run the same
+        builders."""
         from pyspark.sql.window import Window
 
         # ONE stats job for the union of all queries' scoring terms
-        all_terms = sorted(
-            {t for node in queries.values() for t in self._term_boosts(node)}
+        dfs = self.term_dfs(
+            sorted({t for node in queries.values() for t in self._term_boosts(node)})
         )
-        dfs = self.term_dfs(all_terms)
-        _term_only = self._term_only
-        _tree_keys = self._tree_keys
-        _tree_expr = self._tree_expr
-
-        def _not_neg(x):
-            # unary on purpose: pyspark HOF lambdas dispatch on arity
-            return ~x["neg"]
-
+        trees: dict[str, P.Node] = {}
+        positional: dict[str, tuple] = {}
         parts: list[DataFrame] = []
-        rows: list[tuple] = []
-        # qid -> (term-only tree, key -> query-local bit)
-        tree_plans: dict[str, tuple[P.Node, dict[str, int]]] = {}
-        # positional queries sharing the second (positional) scan:
-        # qid -> (index keys in query order, is_phrase, window)
-        pos_meta: dict[str, tuple[list[str], bool, int]] = {}
-        pos_rows: list[tuple] = []
         for qid, node in queries.items():
             if isinstance(node, (P.Phrase, P.Proximity)) and self.has_positions:
-                boosts = self._term_boosts(node)
-                if any(t not in dfs for t in boosts):
-                    continue  # an absent term: the pattern matches nothing
-                keys = [self._key(t, node.field) for t in node.terms]
-                pos_meta[qid] = (
-                    keys,
-                    isinstance(node, P.Phrase),
-                    getattr(node, "window", 0),
+                spec = self._positional_spec(node, dfs)
+                if spec is not None:
+                    positional[qid] = spec
+            elif self._tree_shaped(node):
+                trees[qid] = node
+            else:
+                parts.append(
+                    self.search(node, k=k)
+                    .withColumn("query_id", F.lit(qid))
+                    .select("query_id", "doc_id", "score")
                 )
-                nt = len(boosts)
-                pos_rows += [
-                    (
-                        qid,
-                        t,
-                        bm25_idf(self.n_docs, dfs[t]) * boosts[t],
-                        self.field_avg_dl[self._field_of(t)],
-                        nt,
-                    )
-                    for t in sorted(boosts)
-                ]
-                continue
-            if _term_only(node):
-                keys = sorted(_tree_keys(node))
-                if len(keys) < 63:  # one signed long of query-local bits
-                    boosts = self._term_boosts(node)
-                    scoring = [t for t in sorted(boosts) if t in dfs]
-                    if not scoring:
-                        # a term-only tree only matches docs containing
-                        # at least one positive-skeleton term; with
-                        # every scoring term df=0 nothing can match —
-                        # zero rows, exactly like the per-query plan
-                        continue
-                    qbits = {t: 1 << i for i, t in enumerate(keys)}
-                    rows += [
-                        (
-                            qid,
-                            t,
-                            bm25_idf(self.n_docs, dfs[t]) * boosts[t],
-                            self.field_avg_dl[self._field_of(t)],
-                            qbits[t],
-                            False,
-                        )
-                        for t in scoring
-                    ]
-                    # negative-arm-only terms: weightless marker rows so
-                    # the match expression sees their bit in the doc's
-                    # mask (no BM25 mass — filtered out of the score sum)
-                    rows += [
-                        (
-                            qid,
-                            t,
-                            0.0,
-                            self.field_avg_dl[self._field_of(t)],
-                            qbits[t],
-                            True,
-                        )
-                        for t in sorted(set(keys) - set(boosts))
-                    ]
-                    tree_plans[qid] = (node, qbits)
-                    continue
-            parts.append(
-                self.search(node, k=k)
-                .withColumn("query_id", F.lit(qid))
-                .select("query_id", "doc_id", "score")
-            )
-        k1, b = self.k1, self.b
-        contrib = F.col("w") * (
-            (F.col("tf") * F.lit(k1 + 1.0))
-            / (
-                F.col("tf")
-                + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * (F.col("dl") / F.col("avgdl")))
-            )
+        scored_sets = ([self._tree_scan(trees)] if trees else []) + (
+            [self._positional_scan(positional)] if positional else []
         )
-        # scored (query_id, doc_id, score) sets from the shared scans;
-        # they share ONE two-stage top-k below
-        scored_sets: list[DataFrame] = []
-
-        def _fanout_explode(scan, per_term_rows, fields):
-            """Attach per-(term, query) metadata rows to the shared scan
-            WITHOUT a lookup-table broadcast join: the metadata is
-            driver-known, so it ships as a literal map
-            term → array<struct(...)> and an inner explode performs the
-            same fan-out (identical doubles → identical contributions;
-            collect_list order differs from the join's but every
-            consumer array_sorts first). One job and one
-            BroadcastExchange fewer per shared scan."""
-            casts = {"query_id": "string", "w": "double", "avgdl": "double",
-                     "bit": "long", "neg": "boolean", "nt": "int"}
-            entries = []
-            for t, lst in per_term_rows.items():
-                entries.append(F.lit(t))
-                entries.append(
-                    F.array(
-                        *[
-                            F.struct(
-                                *[
-                                    F.lit(v).cast(casts[f]).alias(f)
-                                    for f, v in zip(fields, tup)
-                                ]
-                            )
-                            for tup in lst
-                        ]
-                    )
-                )
-            m = F.create_map(*entries)
-            return scan.withColumn("_q", F.explode(m[F.col("term")])).select(
-                *scan.columns, *[F.col(f"_q.{f}").alias(f) for f in fields]
-            )
-
-        if rows:
-            by_term: dict[str, list[tuple]] = {}
-            for qid_, t_, w_, a_, bit_, neg_ in rows:
-                by_term.setdefault(t_, []).append((qid_, w_, a_, bit_, neg_))
-            union_terms = sorted({r[1] for r in rows})
-            # ONE groupBy serves every term-only tree (no self-join,
-            # segments decode once): the score aggregates the positive
-            # elements of the term-ascending sorted struct list —
-            # filter() preserves sort order, so the float sum is bitwise
-            # the per-query expression — and the boolean tree evaluates
-            # as long bit-tests over the bit_or'd matched-term mask.
-            sorted_all = F.array_sort(
-                F.collect_list(F.struct("term", "contrib", "neg"))
-            )
-            match_expr = None
-            for qid, (node, qbits) in tree_plans.items():
-                e = (F.col("query_id") == qid) & _tree_expr(
-                    node, F.col("_mask"), qbits
-                )
-                match_expr = e if match_expr is None else (match_expr | e)
-            per = (
-                _fanout_explode(
-                    self.postings_for(union_terms),
-                    by_term,
-                    ["query_id", "w", "avgdl", "bit", "neg"],
-                )
-                .withColumn("contrib", contrib)
-                .groupBy("query_id", "doc_id")
-                .agg(
-                    F.aggregate(
-                        F.filter(sorted_all, _not_neg),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x["contrib"],
-                    ).alias("score"),
-                    F.bit_or("bit").alias("_mask"),
-                )
-                .filter(match_expr)
-            )
-            scored_sets.append(per.select("query_id", "doc_id", "score"))
-        if pos_rows:
-            # second shared scan: ONE positional segment decode over the
-            # union of every positional query's terms. The groupBy
-            # computes the bitwise-pinned BM25 sum (identical
-            # struct(term, contrib) ascending-sort aggregate as the
-            # per-query path) AND collects the per-term position
-            # payloads; candidates (all nt distinct terms present) then
-            # take one Arrow-batched verify that pattern-checks every
-            # query's docs in the same pass.
-            pos_by_term: dict[str, list[tuple]] = {}
-            for qid_, t_, w_, a_, nt_ in pos_rows:
-                pos_by_term.setdefault(t_, []).append((qid_, w_, a_, nt_))
-            pos_terms = sorted({r[1] for r in pos_rows})
-            per_pos = (
-                _fanout_explode(
-                    self._decode_segments(pos_terms, with_positions=True),
-                    pos_by_term,
-                    ["query_id", "w", "avgdl", "nt"],
-                )
-                .withColumn("contrib", contrib)
-                .groupBy("query_id", "doc_id")
-                .agg(
-                    F.aggregate(
-                        F.array_sort(F.collect_list(F.struct("term", "contrib"))),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x["contrib"],
-                    ).alias("score"),
-                    F.count("*").alias("_nm"),
-                    F.first("nt").alias("_nt"),
-                    F.map_from_entries(
-                        F.collect_list(F.struct("term", "positions"))
-                    ).alias("posmap"),
-                )
-                .filter(F.col("_nm") == F.col("_nt"))
-                .select("query_id", "doc_id", "score", "posmap")
-            )
-            meta = pos_meta
-
-            def pos_verify(iterator):
-                from ..index.codec import decode_positions_row
-
-                for pdf in iterator:
-                    keep: list[tuple] = []
-                    for qid, doc_id, score, posmap in zip(
-                        pdf["query_id"], pdf["doc_id"], pdf["score"], pdf["posmap"]
-                    ):
-                        keys, is_phrase, window = meta[qid]
-                        lists = [
-                            decode_positions_row(bytes(posmap[t])) for t in keys
-                        ]
-                        if _positions_satisfy(lists, is_phrase, window):
-                            keep.append((qid, doc_id, score))
-                    yield pd.DataFrame(
-                        keep, columns=["query_id", "doc_id", "score"]
-                    ).astype(
-                        {"doc_id": "int64", "score": "float64"}
-                    )
-
-            scored_sets.append(
-                per_pos.mapInPandas(
-                    pos_verify,
-                    schema="query_id string, doc_id long, score double",
-                )
-            )
         if scored_sets:
             scored = scored_sets[0]
             for s in scored_sets[1:]:
@@ -1475,9 +1214,7 @@ class IndexReader:
             )
             parts.append(topk.select("query_id", "doc_id", "score"))
         if not parts:
-            return self.spark.createDataFrame(
-                [], "query_id string, doc_id long, score double"
-            )
+            return self._empty_scored()
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -1513,24 +1250,12 @@ class IndexReader:
         from ..index.build import term_bucket
 
         buckets = sorted({term_bucket(t) for t in weights})
-        wmap = F.create_map(
-            *[F.lit(x) for t, w in weights.items() for x in (t, float(w))]
+        wmap = self._lit_map({t: float(w) for t, w in weights.items()})
+        avgdl_map = self._lit_map(
+            {t: float(self.field_avg_dl[self._field_of(t)]) for t in weights}
         )
-        avgdl_map = F.create_map(
-            *[
-                F.lit(x)
-                for t in weights
-                for x in (t, float(self.field_avg_dl[self._field_of(t)]))
-            ]
-        )
-        k1, b = self.k1, self.b
-        ub = wmap[F.col("term")] * (
-            (F.col("max_tf") * F.lit(k1 + 1.0))
-            / (
-                F.col("max_tf")
-                + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * (F.col("min_dl") / avgdl_map[F.col("term")]))
-            )
+        ub = wmap[F.col("term")] * bm25_tf_norm(
+            F.col("max_tf"), F.col("min_dl"), avgdl_map[F.col("term")], self.k1, self.b
         )
         top_blocks = (
             self.segments.filter(
@@ -1542,6 +1267,7 @@ class IndexReader:
         )
         w_map = dict(weights)
         avgdls = {t: self.field_avg_dl[self._field_of(t)] for t in weights}
+        k1, b = self.k1, self.b
 
         def decode(iterator):
             from ..index import codec as C

@@ -163,3 +163,31 @@ def test_bbox_ignores_non_coordinate_numbers(spark):
         ).collect()
     ]
     assert got == [want for _, want in rows]
+
+
+def test_phrase_on_unknown_schemaless_field_matches_nothing(spark, tmp_path):
+    """An element word clause on a field the index never saw resolves
+    to a dead shadow key (no postings, no field avgdl). As a phrase, a
+    proximity, an Or arm or a negative arm, scored or not, it matches
+    nothing and subtracts nothing (not.noise:105 — an unknown keypath
+    contributes zero matches)."""
+    reader = _build(spark, tmp_path)
+
+    def ids(q):
+        return {r["result"] for r in run_query(reader, q, default_k=None).collect()}
+
+    assert ids('find {missing: [~="quick brown"]} return ._id') == set()
+    assert ids('find {missing: [~5="quick dog"]} return ._id') == set()
+    assert ids('find {missing: [~="quick brown"]} || {t: ~="dog"} return ._id') == {"2", "3"}
+    assert ids(
+        'find {missing: [~="quick brown"]} || {t: ~="dog"} '
+        "order score() desc return ._id"
+    ) == {"2", "3"}
+    # a dead key inside a scored term-only tree: a weightless Or arm,
+    # and a negative arm that subtracts nothing
+    assert ids(
+        'find {missing: [~="quick"]} || {t: ~="dog"} order score() desc return ._id'
+    ) == {"2", "3"}
+    assert ids(
+        'find {t: ~="dog"} && !{missing: [~="quick"]} order score() desc return ._id'
+    ) == {"2", "3"}

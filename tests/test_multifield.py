@@ -250,3 +250,23 @@ def test_elem_word_on_typed_array_column(typed_array_reader):
         )
     ).collect()}
     assert got2 == {1}
+
+
+def test_elem_phrase_and_proximity_on_typed_array_column(typed_array_reader):
+    """An element phrase needs consecutive words, an element proximity
+    every word within the window in any order — both inside ONE stored
+    element."""
+    r = typed_array_reader
+
+    def hits(terms, window):
+        node = P.ElemWord("tags", ("word", terms, window), depth=1)
+        return {x["doc_id"] for x in r._match_set(node).collect()}
+
+    assert hits(("quick", "brown"), None) == {2}
+    assert hits(("quick", "fox"), None) == {0}
+    assert hits(("brown", "quick"), None) == set()
+    assert hits(("quick", "fox"), 2) == {0}
+    assert hits(("fox", "quick"), 2) == {0}
+    # "fox lazy" is adjacent in doc 0 only across its element boundary
+    assert hits(("fox", "lazy"), None) == set()
+    assert hits(("fox", "lazy"), 5) == set()

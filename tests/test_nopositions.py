@@ -65,3 +65,17 @@ def test_phrase_raises_without_positions(spark, two_indexes):
         r._match_set(P.Phrase(("w00000", "w00001"))).collect()
     with pytest.raises(ValueError, match="store_positions"):
         r._match_set(P.Proximity(("w00000", "w00001"), window=3)).collect()
+
+
+def test_exact_match_without_positions(spark, two_indexes):
+    """Without positions, ExactMatch prefilters with the AND of its
+    tokens instead of a phrase; the verified match set is the same."""
+    with_pos, no_pos = two_indexes
+    a, b = IndexReader(spark, with_pos), IndexReader(spark, no_pos)
+    txt = a.docs.filter("doc_id = 5").select("text").collect()[0]["text"]
+    for lit in ("w00050 w00007", txt):
+        node = P.ExactMatch(lit)
+        ra = sorted(r["doc_id"] for r in a._match_set(node).collect())
+        rb = sorted(r["doc_id"] for r in b._match_set(node).collect())
+        assert ra == rb, lit
+    assert 5 in rb

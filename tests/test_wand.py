@@ -142,9 +142,11 @@ def test_wand_bin_theta0_exact():
     assert stats["blocks_decoded"] >= 1
 
 
-def test_search_many_matches_individual(reader):
+def test_search_many_matches_individual(reader, small_oracle):
     """The batched query-set action must return exactly each query's
-    individual top-k."""
+    individual top-k, and both must equal the pure-Python oracle bit
+    for bit (search and search_many share one lowering, so only the
+    oracle checks them independently)."""
     qs = dict(WAND_QUERIES)  # incl. or_missing_term (df=0 arm)
     # mixed batch: non-flat plans fall back per-query inside the action
     qs["not_mixed"] = P.Not(P.Term("w00050"), P.Term("w00002"))
@@ -190,6 +192,7 @@ def test_search_many_matches_individual(reader):
         want = [(r["doc_id"], r["score"]) for r in reader.search(node, k=10).collect()]
         got = sorted(batched.get(qid, []), key=lambda x: (-x[1], x[0]))
         assert got == want, qid
+        assert got == small_oracle.search(node, k=10), qid
 
 
 def test_query_planner_routes(reader):
