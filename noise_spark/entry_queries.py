@@ -27,7 +27,7 @@ from .index.catalog import IndexCatalog
 from .query import plan as P
 from .query.engine import IndexReader
 
-INDEX_FORMAT_VERSION = "v9"  # bump to invalidate cached on-disk indexes
+INDEX_FORMAT_VERSION = "v10"  # bump to invalidate cached on-disk indexes
 K1, B = 1.2, 0.75
 
 _READERS: dict[str, IndexReader] = {}

@@ -39,7 +39,7 @@ from __future__ import annotations
 
 import time
 import zlib
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -47,7 +47,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import BM25_B, BM25_K1
 from ..analysis.tokenizer import ANALYZERS
 from ..corpus import extract_text_from_html
 from . import codec
@@ -107,6 +106,13 @@ SEGMENTS_SCHEMA = T.StructType(
 
 N_BUCKETS = 64
 
+# Hot-term (Zipf-head) detection samples ~this many docs. The sample
+# only SIZES the salt split (est_df = count × mod is unbiased at any
+# corpus size), so ±30% estimate error moves n_salts by ≤1 — load
+# balance, never correctness. 2k docs keeps the pre-shuffle sampling
+# job ~1% of the main tokenize at bench scale and O(1) at any scale.
+HOT_SAMPLE_DOCS = 2_000
+
 # Separator between field name and stem in a scoped term key — the
 # reference's ``W<keypath>!<stem>`` layout (src/key_builder.rs:64-82)
 # with U+001F instead of '!' so no escaping is needed (tokens from the
@@ -124,20 +130,16 @@ def scoped_term(field: str, term: str) -> str:
     return f"{field}{FIELD_SEP}{term}"
 
 
-def term_bucket(term: str, n_buckets: int = N_BUCKETS) -> int:
-    """Deterministic, process-stable term → bucket (crc32, not hash())."""
-    return zlib.crc32(term.encode("utf-8")) % n_buckets
+def term_bucket(term: str) -> int:
+    """Deterministic, process-stable term → bucket (crc32, not hash()).
+    The build partitions segments by it and the reader prunes by it, so
+    the bucket count is a constant of the index layout."""
+    return zlib.crc32(term.encode("utf-8")) % N_BUCKETS
 
 
 @dataclass
 class BuildConfig:
     analyzer: str = "porter"
-    # Hot-term (Zipf-head) detection samples ~this many docs. The sample
-    # only SIZES the salt split (est_df = count × mod is unbiased at any
-    # corpus size), so ±30% estimate error moves n_salts by ≤1 — load
-    # balance, never correctness. 2k docs keeps the pre-shuffle sampling
-    # job ~1% of the main tokenize at bench scale and O(1) at any scale.
-    hot_sample_docs: int = 2_000
     # Document fields to index. One field → bare term keys (the common
     # web-corpus case). Multiple fields → every postings/segments key is
     # the scoped ``field␟term`` (the reference's keypath-scoped keys,
@@ -149,11 +151,6 @@ class BuildConfig:
     fields: tuple | str = ("text",)
     block_size: int = 128
     postings_per_salt: int = 50_000  # hot-term split threshold (df per salt)
-    n_buckets: int = N_BUCKETS
-    partitions: int | None = None
-    verify_extraction: bool = True
-    bm25_k1: float = BM25_K1
-    bm25_b: float = BM25_B
     # If the input table already carries a stable unique docID column,
     # name it here to skip the rank-over-url numbering shuffle entirely
     # (a large scale win when ids pre-exist).
@@ -171,7 +168,6 @@ class BuildConfig:
     # return, or derive virtual fields from (e.g. bbox coordinates).
     # Supported on the pre-extracted path (input already has `text`).
     extra_doc_cols: tuple = ()
-    extra: dict = field(default_factory=dict)
 
 
 # Position jump between consecutive array elements of a multi-valued
@@ -184,9 +180,7 @@ class BuildConfig:
 POSITION_GAP = 1_000
 
 
-def _tokenize_batches(
-    analyzer_name: str, verify: bool, fields: tuple = ("text",), store_positions: bool = True
-):
+def _tokenize_batches(analyzer_name: str, fields: tuple = ("text",), store_positions: bool = True):
     analyze = ANALYZERS[analyzer_name]
     scoped = len(fields) > 1
 
@@ -267,7 +261,7 @@ def _make_extractor(id_cols: list, extra: list):
     return fn
 
 
-def _make_block_builder(block_size: int, n_buckets: int):
+def _make_block_builder(block_size: int):
     def build_blocks(key, pdf):
         term, salt = key
         pdf = pdf.sort_values("doc_id")
@@ -299,7 +293,7 @@ def _make_block_builder(block_size: int, n_buckets: int):
         max_tf = np.maximum.reduceat(tfs, starts)
         min_dl = np.minimum.reduceat(dls, starts)
         tf_sum = np.add.reduceat(tfs, starts)
-        bucket = term_bucket(term, n_buckets)
+        bucket = term_bucket(term)
         rows = {
             "term": term,
             "salt": int(salt),
@@ -374,7 +368,7 @@ def build_index(
     def done(stage: str) -> bool:
         stage = sp(stage)
         if cat.stage_complete(stage):
-            metrics["stages"][stage] = {"skipped": True, **(cat.stage_info(stage) or {}).get("metrics", {})}
+            metrics["stages"][stage] = {"skipped": True, **cat.stage_info(stage)["metrics"]}
             return True
         return False
 
@@ -412,13 +406,13 @@ def build_index(
                 + extra_keep
             )
         )
-        if "html" in cols and cfg.verify_extraction and extra_keep:
+        if "html" in cols and extra_keep:
             raise ValueError(
                 "extra_doc_cols is only supported on the pre-extracted "
                 "path (input already has `text`, no `html`): the html "
                 f"extraction stage does not carry {extra_keep} through"
             )
-        if "html" in cols and cfg.verify_extraction:
+        if "html" in cols:
             # extract text from html FIRST and drop the heavy html payload
             # so the numbering shuffle/persist only carries extracted text
             prepared = prepared.select(
@@ -460,7 +454,7 @@ def build_index(
             # once into the persist. urls must be unique — they are
             # already the delete/upsert identity key.
             slim = pages.select("url") if "url" in cols else prepared.select("url")
-            numbered_slim = assign_doc_ids(slim, partitions=cfg.partitions)
+            numbered_slim = assign_doc_ids(slim)
             numbered = prepared.join(numbered_slim, "url")
             numbered._noise_persisted = getattr(  # type: ignore[attr-defined]
                 numbered_slim, "_noise_persisted", None
@@ -475,29 +469,37 @@ def build_index(
         docs = numbered.select(
             "doc_id", "url", *[_raw_col(c).alias(c) for c in keep]
         )
-        docs.write.mode("overwrite").parquet(cat.stage_path(sp("docs")))
+        # written WITHOUT the parquet VARIANT logical-type annotation
+        # (Spark >= 4.1 adds it by default): pyarrow cannot parse it, so
+        # the catalog could not read the stage's footers for the lineage
+        # row counts. Unannotated, a schemaless VARIANT column is the
+        # plain (value, metadata) binary group that Spark 4.0 wrote, and
+        # Spark still reads it as VARIANT from its own schema metadata.
+        annotate = "spark.sql.parquet.variant.annotateLogicalType.enabled"
+        prev_annotate = spark.conf.get(annotate, None)
+        spark.conf.set(annotate, "false")
+        try:
+            docs.write.mode("overwrite").parquet(cat.stage_path(sp("docs")))
+        finally:
+            if prev_annotate is None:
+                spark.conf.unset(annotate)
+            else:
+                spark.conf.set(annotate, prev_annotate)
         if persisted is not None:
             persisted.unpersist()
+        # the high_doc_id() watermark: dense numbering derives it as
+        # offset + rows - 1 from committed lineage with zero jobs;
+        # caller-provided ids (compaction preserves, users choose) pin it
+        # as max_doc_id with one max-agg over the written parquet (footer
+        # stats only — column-pruned to doc_id)
         docs_metrics = {"seconds": time.time() - t0, "doc_id_offset": doc_id_offset}
         if cfg.doc_id_col:
-            # caller-provided ids (compaction preserves, users choose):
-            # one max-agg over the written parquet (footer stats only —
-            # column-pruned to doc_id) pins the watermark in the manifest
             row = (
                 spark.read.parquet(cat.stage_path(sp("docs")))
                 .agg(F.max("doc_id"))
                 .collect()[0]
             )
             docs_metrics["max_doc_id"] = int(row[0]) if row[0] is not None else -1
-        else:
-            # dense numbering: the max is arithmetic on committed lineage
-            # (commit_stages records the row count), so high_doc_id()
-            # derives offset + rows - 1 with zero jobs. dense_ids marks
-            # the arithmetic as VALID — doc_id_offset alone is not
-            # enough, because pre-r4 manifests committed it for
-            # caller-provided (gapped) ids too; those legacy manifests
-            # must take high_doc_id's scan fallback instead.
-            docs_metrics["dense_ids"] = True
         commit("docs", docs_metrics)
 
     docs = spark.read.parquet(cat.stage_path(sp("docs")))
@@ -514,13 +516,11 @@ def build_index(
     if missing_fields:
         raise ValueError(f"indexed fields not in docs table: {missing_fields}")
     postings = docs.select("doc_id", *cfg.fields).mapInPandas(
-        _tokenize_batches(
-            cfg.analyzer, cfg.verify_extraction, tuple(cfg.fields), cfg.store_positions
-        ),
+        _tokenize_batches(cfg.analyzer, tuple(cfg.fields), cfg.store_positions),
         schema=POSTINGS_SCHEMA,
     )
 
-    n_docs = (cat.stage_info(sp("docs")) or {}).get("rows") or docs.count()
+    n_docs = cat.stage_info(sp("docs"))["rows"]
 
     # -- stage B: segments (salted merge + block compression) ----------------
     # ONE pass: token stream → salted shuffle → compressed blocks.
@@ -536,15 +536,13 @@ def build_index(
         if n_docs <= cfg.postings_per_salt:
             salted = postings.withColumn("salt", F.lit(0))
         else:
-            sample_mod = max(1, n_docs // max(cfg.hot_sample_docs, 1))
+            sample_mod = max(1, n_docs // HOT_SAMPLE_DOCS)
             sample = docs.filter(F.col("doc_id") % sample_mod == 0).select(
                 "doc_id", *cfg.fields
             )
             est = (
                 sample.mapInPandas(
-                    _tokenize_batches(
-                        cfg.analyzer, cfg.verify_extraction, tuple(cfg.fields), False
-                    ),
+                    _tokenize_batches(cfg.analyzer, tuple(cfg.fields), False),
                     schema=POSTINGS_SCHEMA,
                 )
                 .groupBy("term")
@@ -589,8 +587,7 @@ def build_index(
         # data so 100 TB-scale postings still land ≤ ~256 MB per
         # partition: estimated postings bytes ≈ docs-stage bytes × 4
         # (measured expansion), bytes from committed lineage (no job).
-        docs_bytes = (cat.stage_info(sp("docs")) or {}).get("bytes", 0) or 0
-        est_shuffle_bytes = docs_bytes * 4
+        est_shuffle_bytes = cat.stage_info(sp("docs"))["bytes"] * 4
         prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
         merge_parts = max(
             spark.sparkContext.defaultParallelism * 8,
@@ -600,7 +597,7 @@ def build_index(
         spark.conf.set("spark.sql.shuffle.partitions", str(merge_parts))
         try:
             segments = salted.groupBy("term", "salt").applyInPandas(
-                _make_block_builder(cfg.block_size, cfg.n_buckets),
+                _make_block_builder(cfg.block_size),
                 schema=SEGMENTS_SCHEMA,
             )
             # regroup by bucket before the partitioned write: otherwise

@@ -26,6 +26,48 @@ import uuid
 import zlib
 
 
+# The one supported manifest layout. Every manifest this module commits
+# records it; ``current_manifest`` refuses any other (including the
+# pre-format manifests, which carry no ``format`` key) instead of every
+# reader and writer branching on old variants — Delta Lake's protocol
+# version re-expressed.
+MANIFEST_FORMAT = 1
+
+# The stages a build (base or appended generation) commits; a
+# generation is visible to readers only once all four are committed.
+GENERATION_STAGES = ("docs", "term_stats", "corpus_stats", "segments")
+
+
+def stage_name(gen: str, kind: str) -> str:
+    """The manifest name of stage ``kind`` in generation ``gen``: bare
+    for the base build (``gen == ""``), ``genN/<kind>`` for appends."""
+    return f"{gen}/{kind}" if gen else kind
+
+
+def appended_generations(manifest: dict) -> list[str]:
+    """Every appended generation prefix (``gen1``, ``gen2``, ...) that has
+    at least one committed stage, in append order — torn ones included."""
+    return sorted(
+        {n.split("/")[0] for n in manifest["stages"] if n.startswith("gen") and "/" in n},
+        key=lambda g: int(g[3:]),
+    )
+
+
+def generation_complete(manifest: dict, gen: str) -> bool:
+    return all(stage_name(gen, k) in manifest["stages"] for k in GENERATION_STAGES)
+
+
+def visible_generations(manifest: dict) -> list[str]:
+    """The base (``""``) and appended generations with their FULL stage
+    set committed: a reader opened between a torn append's commits must
+    never see phantom docs with missing stats/segments."""
+    return [
+        g
+        for g in [""] + appended_generations(manifest)
+        if generation_complete(manifest, g)
+    ]
+
+
 class CommitConflict(RuntimeError):
     """Raised when a compare-and-swap commit finds the catalog moved on
     from the snapshot the writer based its update on (Iceberg's
@@ -52,7 +94,14 @@ class IndexCatalog:
         with open(ptr) as f:
             name = f.read().strip()
         with open(os.path.join(self.manifest_dir, name)) as f:
-            return json.load(f)
+            manifest = json.load(f)
+        if manifest.get("format") != MANIFEST_FORMAT:
+            raise ValueError(
+                f"index {self.root} has manifest format "
+                f"{manifest.get('format')!r}; only format {MANIFEST_FORMAT} "
+                "is supported — rebuild the index"
+            )
+        return manifest
 
     def stage_info(self, stage: str) -> dict | None:
         return self.current_manifest()["stages"].get(stage)
@@ -69,14 +118,13 @@ class IndexCatalog:
 
     # -- commit side ----------------------------------------------------------
     def _file_lineage(self, path: str) -> list[dict]:
-        """Per-file lineage rows from parquet footers (metadata-only read)."""
+        """Per-file lineage rows from parquet footers (metadata-only read).
+        Raises when the stage's files cannot be read: readers trust the
+        committed row counts, so a commit never records a guess."""
         import pyarrow.dataset as ds
 
         out = []
-        try:
-            dataset = ds.dataset(path, format="parquet", partitioning="hive")
-        except Exception:
-            return out
+        dataset = ds.dataset(path, format="parquet", partitioning="hive")
         for frag in dataset.get_fragments():
             rows = frag.count_rows()
             size = os.path.getsize(frag.path)
@@ -174,6 +222,7 @@ class IndexCatalog:
             )
         snapshot_id = uuid.uuid4().hex[:16]
         manifest = {
+            "format": MANIFEST_FORMAT,
             "snapshot_id": snapshot_id,
             "parent": prev.get("snapshot_id"),
             "committed_ts": time.time(),

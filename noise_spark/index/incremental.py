@@ -38,55 +38,28 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .build import BuildConfig, build_index
-from .catalog import IndexCatalog
+from .catalog import IndexCatalog, appended_generations, generation_complete, stage_name
 
 
-def _generations(manifest: dict) -> list[str]:
-    return sorted(
-        {n.split("/")[0] for n in manifest["stages"] if n.startswith("gen") and "/" in n},
-        key=lambda g: int(g[3:]),
-    )
-
-
-def high_doc_id(spark: SparkSession, index_dir: str) -> int:
+def high_doc_id(index_dir: str) -> int:
     """High-water docID from MANIFEST METADATA ONLY (the ``HDB``
-    high-seq header, src/index.rs:91-94): dense-numbered generations
-    derive ``doc_id_offset + rows - 1`` from commit metrics + lineage;
-    caller-provided-id builds committed an explicit ``max_doc_id``
-    metric. Zero Spark jobs — at 100 TB the watermark must be a
-    constant-time driver read, not a per-generation max() scan. Only a
-    legacy manifest (committed before these metrics existed) falls back
-    to scanning that generation's docs parquet."""
-    cat = IndexCatalog(index_dir)
-    manifest = cat.current_manifest()
+    high-seq header, src/index.rs:91-94): caller-provided-id builds
+    commit an explicit ``max_doc_id`` metric; dense-numbered ones derive
+    ``doc_id_offset + rows - 1`` from commit metrics + lineage. Zero
+    Spark jobs — at 100 TB the watermark must be a constant-time driver
+    read, not a per-generation max() scan."""
+    manifest = IndexCatalog(index_dir).current_manifest()
     hi = -1
-    for g in [""] + _generations(manifest):
-        stage = f"{g}/docs" if g else "docs"
-        info = manifest["stages"].get(stage)
+    for g in [""] + appended_generations(manifest):
+        info = manifest["stages"].get(stage_name(g, "docs"))
         if not info:
             continue
-        metrics = info.get("metrics", {}) or {}
-        rows = int(info.get("rows", 0) or 0)
+        metrics = info["metrics"]
         if "max_doc_id" in metrics:
-            hi = max(hi, int(metrics["max_doc_id"]))
-        elif metrics.get("dense_ids"):
-            # offset+rows-1 is valid ONLY for dense numbering; the
-            # explicit dense_ids marker distinguishes it from legacy
-            # manifests whose doc_id_offset was committed for gapped
-            # caller-provided ids too (pre-r4 compacted indexes)
-            if rows:
-                hi = max(hi, int(metrics["doc_id_offset"]) + rows - 1)
-        else:  # legacy manifest: metrics predate the watermark contract
-            row = (
-                spark.read.parquet(info["path"]).agg(F.max("doc_id")).collect()[0]
-            )
-            if row[0] is not None:
-                hi = max(hi, row[0])
+            hi = max(hi, metrics["max_doc_id"])
+        else:
+            hi = max(hi, metrics["doc_id_offset"] + info["rows"] - 1)
     return hi
-
-
-def _gen_complete(manifest: dict, gen: str) -> bool:
-    return all(f"{gen}/{k}" in manifest["stages"] for k in ("docs", "term_stats", "corpus_stats", "segments"))
 
 
 def append_docs(
@@ -124,24 +97,17 @@ def append_docs(
         )
     cat = IndexCatalog(index_dir)
     manifest = cat.current_manifest()
-    gens = _generations(manifest)
-    if gens and not _gen_complete(manifest, gens[-1]):
+    gens = appended_generations(manifest)
+    if gens and not generation_complete(manifest, gens[-1]):
         gen = gens[-1]  # resume the torn generation
-        docs_info = manifest["stages"].get(f"{gen}/docs")
-        torn_metrics = (docs_info or {}).get("metrics", {})
-        if docs_info is not None and "doc_id_offset" in torn_metrics:
-            # reuse the watermark the torn attempt numbered its docs with
-            watermark = int(torn_metrics["doc_id_offset"])
-        else:
-            # docs stage missing OR committed before the doc_id_offset
-            # metric existed: renumber above the observed high-water mark
-            # (includes the torn gen's own docs) — may leave an id gap,
-            # never a collision. Defaulting to 0 here would renumber from
-            # 0 and collide with the base build's ids.
-            watermark = high_doc_id(spark, index_dir) + 1
+        docs_info = manifest["stages"].get(stage_name(gen, "docs"))
     else:
-        gen = f"gen{len(gens) + 1}"
-        watermark = high_doc_id(spark, index_dir) + 1
+        gen, docs_info = f"gen{len(gens) + 1}", None
+    # a torn attempt that committed its docs stage fixes the watermark it
+    # numbered them with; otherwise number above the high-water mark
+    watermark = (
+        docs_info["metrics"]["doc_id_offset"] if docs_info else high_doc_id(index_dir) + 1
+    )
     metrics = build_index(
         spark,
         new_pages,
@@ -358,15 +324,14 @@ def compaction_due(
     counters come from committed stage metadata: `n_docs` commit metrics
     on corpus_stats, lineage row counts on the tombstones stage."""
     manifest = IndexCatalog(index_dir).current_manifest()
-    gens = _generations(manifest)
+    gens = appended_generations(manifest)
     built = 0
     for g in [""] + gens:
-        stage = f"{g}/corpus_stats" if g else "corpus_stats"
-        info = manifest["stages"].get(stage)
+        info = manifest["stages"].get(stage_name(g, "corpus_stats"))
         if info:
-            built += int(info.get("metrics", {}).get("n_docs", 0) or 0)
+            built += info["metrics"]["n_docs"]
     t_info = manifest["stages"].get("tombstones")
-    n_tombs = int(t_info.get("rows", 0) or 0) if t_info else 0
+    n_tombs = t_info["rows"] if t_info else 0
     frac = n_tombs / built if built else 0.0
     return {
         "due": len(gens) >= max_generations or frac >= max_tombstone_frac,

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import BM25_B, BM25_K1
-from ..index.catalog import IndexCatalog
+from ..index.catalog import IndexCatalog, stage_name, visible_generations
 from ..scoring import bm25_idf, bm25_tf_norm
 from . import plan as P
 
@@ -114,46 +114,15 @@ class IndexReader:
     a fresh build over the logical corpus (the reference's merge-op
     counter semantics, src/index.rs:301-322)."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        index_dir: str,
-        k1: float = BM25_K1,
-        b: float = BM25_B,
-    ):
+    def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.cat = IndexCatalog(index_dir)
-        self.k1, self.b = k1, b
         manifest = self.cat.current_manifest()
-        stages = manifest["stages"]
-
-        def gen_complete(g: str) -> bool:
-            # a generation is visible only when its FULL stage set is
-            # committed — a reader opened between a torn append's commits
-            # must never see phantom docs with missing stats/segments
-            return all(
-                (f"{g}/{k}" if g else k) in stages
-                for k in ("docs", "term_stats", "corpus_stats", "segments")
-            )
-
-        gens = [g for g in [""] if gen_complete(g)]
-        gens += [
-            g
-            for g in sorted(
-                {n.split("/")[0] for n in stages if n.startswith("gen") and "/" in n},
-                key=lambda g: int(g[3:]),
-            )
-            if gen_complete(g)
-        ]
-        self._gens = gens
+        stages = self._stages = manifest["stages"]
+        gens = self._gens = visible_generations(manifest)
 
         def paths(kind: str) -> list[str]:
-            out = []
-            for g in gens:
-                name = f"{g}/{kind}" if g else kind
-                if name in stages:
-                    out.append(stages[name]["path"])
-            return out
+            return [stages[stage_name(g, kind)]["path"] for g in gens]
 
         self._docs_paths = paths("docs")
         self._term_stats_paths = paths("term_stats")
@@ -162,7 +131,7 @@ class IndexReader:
         # corpus stats: per-field Σ over generation rows + delete deltas.
         # Both tables hold one row per indexed field, so they are read on
         # the driver with pyarrow (like catalog footers): opening a
-        # reader runs no Spark job unless the index has tombstones.
+        # reader runs no Spark job.
         field_order: list[str] = []
         fstats: dict[str, list[int]] = {}  # field -> [n_docs, total_tokens]
         for p in paths("corpus_stats"):
@@ -188,62 +157,28 @@ class IndexReader:
         }
         self.avg_dl = self.field_avg_dl.get(self.default_field, 0.0)
 
-        # tombstones stay a DataFrame end-to-end: never collected to the
-        # driver or shipped in task closures (a bulk delete at scale
-        # would otherwise become driver memory + per-task closure bytes).
-        # DataFrame paths anti-join it; the WAND path cogroups a BINNED
-        # view of it so each bin receives only its own tombstones.
-        self._tombstones: DataFrame | None = None
-        self._n_tombstones = 0
-        if "tombstones" in stages:
-            # row count from the committed manifest lineage — constant
-            # time, no job; drives the broadcast decision below
-            self._n_tombstones = int(stages["tombstones"].get("rows", 0) or 0)
-            if self._n_tombstones:
-                self._tombstones = spark.read.parquet(
-                    stages["tombstones"]["path"]
-                )
-            else:
-                # rows==0/absent can also mean the lineage read failed at
-                # commit time (catalog degrades to [] on footer errors) —
-                # for DELETED-DOC EXCLUSION the data, not the metadata, is
-                # ground truth, so verify with the old isEmpty job before
-                # concluding there is nothing to exclude
-                t = spark.read.parquet(stages["tombstones"]["path"])
-                if not t.isEmpty():
-                    self._tombstones = t
-                    self._n_tombstones = t.count()
-        # the bitmap-shaped view of the same tombstone set (written by
-        # delete_docs in the same atomic commit; absent on pre-bitmap
-        # indexes): lets _minus_tombstones stay a BROADCAST join above
-        # the row-broadcast ceiling (index/bitmaps.py)
-        self._tombstone_bitmaps: DataFrame | None = None
-        self._n_bitmap_words = 0
-        if self._n_tombstones and "tombstone_bitmaps" in stages:
-            self._tombstone_bitmaps = spark.read.parquet(
-                stages["tombstone_bitmaps"]["path"]
-            )
-            # mask-row count from committed lineage (no job); sizes the
-            # broadcast-vs-join decision in _minus_tombstones. Missing
-            # lineage (degraded commit) → assume small: the mask table
-            # of a legacy/degraded index predates multi-GB deletes.
-            self._n_bitmap_words = int(
-                stages["tombstone_bitmaps"].get("rows", 0) or 0
-            )
+        # tombstone and bitmap-mask row counts come from committed
+        # lineage (no job) and drive the broadcast decisions in
+        # _minus_tombstones; delete_docs commits both stages together
+        self._n_tombstones = stages["tombstones"]["rows"] if "tombstones" in stages else 0
+        self._n_bitmap_words = (
+            stages["tombstone_bitmaps"]["rows"] if self._n_tombstones else 0
+        )
         self._term_stats_delta = (
             stages["term_stats_delta"]["path"] if "term_stats_delta" in stages else None
         )
         self._df_cache: dict[str, int] = {}
-        ts_info = stages.get("term_stats") or {}
-        self.analyzer = (ts_info.get("metrics") or {}).get("analyzer", "porter")
+        # query-time analyzer: the one the first visible generation
+        # (the base build, when it is complete) was built with
+        self.analyzer = (
+            stages[stage_name(gens[0], "term_stats")]["metrics"]["analyzer"]
+            if gens
+            else "porter"
+        )
         # positions are optional (BuildConfig.store_positions=False omits
         # the payload); every generation must agree for phrase/prox to work
         self.has_positions = all(
-            (stages[f"{g}/segments" if g else "segments"].get("metrics") or {}).get(
-                "positions", True
-            )
-            for g in gens
-            if (f"{g}/segments" if g else "segments") in stages
+            stages[stage_name(g, "segments")]["metrics"]["positions"] for g in gens
         )
         # virtual (derived) document fields: name → (docs DF → Column).
         # The typed-column re-expression of the reference's dynamic
@@ -491,6 +426,27 @@ class IndexReader:
         delta = [self._term_stats_delta] if self._term_stats_delta else []
         return self._union(self._term_stats_paths + delta)
 
+    # Tombstones stay a DataFrame end-to-end: never collected to the
+    # driver or shipped in task closures (a bulk delete at scale would
+    # otherwise become driver memory + per-task closure bytes).
+    # DataFrame paths anti-join it; the WAND path cogroups a BINNED view
+    # of it so each bin receives only its own tombstones. None when the
+    # snapshot has no tombstones.
+    @cached_property
+    def _tombstones(self) -> DataFrame | None:
+        if not self._n_tombstones:
+            return None
+        return self.spark.read.parquet(self._stages["tombstones"]["path"])
+
+    # The bitmap-shaped view of the same tombstone set: lets
+    # _minus_tombstones stay a BROADCAST join above the row-broadcast
+    # ceiling (index/bitmaps.py).
+    @cached_property
+    def _tombstone_bitmaps(self) -> DataFrame | None:
+        if not self._n_tombstones:
+            return None
+        return self.spark.read.parquet(self._stages["tombstone_bitmaps"]["path"])
+
     # below this many tombstones the anti-join side is explicitly
     # broadcast (a doc_id column of 5M longs is ~40 MB serialized —
     # comfortably a map-side hash filter, no shuffle of the decoded
@@ -499,10 +455,10 @@ class IndexReader:
     # ≤ min(16·n, universe/4) bytes — 2×10⁹ deletes over 10¹⁰ docs
     # broadcast as ≤2.5 GB — so delete application avoids shuffling the
     # match set up to BROADCAST_BITMAP_MAX_WORDS mask rows (~2 GB
-    # built); beyond that (or on a legacy pre-bitmap index) it falls
-    # back to the shuffling anti-join, which the compaction policy
-    # bounds (fold at 20% tombstones). The WAND path takes none of
-    # these — it cogroups a BINNED tombstone view per docID bin.
+    # built); beyond that it falls back to the shuffling anti-join,
+    # which the compaction policy bounds (fold at 20% tombstones). The
+    # WAND path takes none of these — it cogroups a BINNED tombstone
+    # view per docID bin.
     BROADCAST_TOMBSTONES_MAX = 5_000_000
     # mask rows above which the bitmap side itself is too big to
     # broadcast safely (16 bytes/row → ~2 GB; the hard broadcast cap is
@@ -515,16 +471,13 @@ class IndexReader:
     SEED_MIN_POSTINGS = 262_144
 
     def _minus_tombstones(self, df: DataFrame) -> DataFrame:
-        if self._tombstones is None:
+        if not self._n_tombstones:
             return df
         if self._n_tombstones <= self.BROADCAST_TOMBSTONES_MAX:
             # deterministic plan: don't leave the no-shuffle path to
             # AQE's runtime estimate of the tombstone side
             return df.join(F.broadcast(self._tombstones), "doc_id", "left_anti")
-        if (
-            self._tombstone_bitmaps is not None
-            and self._n_bitmap_words <= self.BROADCAST_BITMAP_MAX_WORDS
-        ):
+        if self._n_bitmap_words <= self.BROADCAST_BITMAP_MAX_WORDS:
             from ..index.bitmaps import not_deleted
 
             return not_deleted(df, self._tombstone_bitmaps)
@@ -582,18 +535,31 @@ class IndexReader:
     def _decode_segments(
         self, terms: list[str] | None, with_positions: bool = False
     ) -> DataFrame:
-        """(term, doc_id, tf, dl[, positions]) from compressed segment
-        blocks. Decode is one Arrow-batched pass, numpy per block; the
-        positions column (when requested) is re-sliced per doc from the
-        block payload without a decode/re-encode round-trip."""
+        """Live ``(term, doc_id, tf, dl[, positions])`` postings of
+        ``terms`` (all terms when None): a bucket- and term-pruned
+        segment scan through :meth:`_decode_blocks`, minus tombstones."""
         segs = self.segments
         if terms is not None:
-            from ..index.build import term_bucket
+            segs = self._segments_of(terms)
+        return self._minus_tombstones(self._decode_blocks(segs, with_positions))
 
-            buckets = sorted({term_bucket(t) for t in terms})
-            segs = segs.filter(
-                F.col("bucket").isin(buckets) & F.col("term").isin(list(terms))
-            )
+    def _segments_of(self, terms) -> DataFrame:
+        """Segment rows of ``terms``: the bucket partition prunes
+        directories, the term filter prunes row groups."""
+        from ..index.build import term_bucket
+
+        buckets = sorted({term_bucket(t) for t in terms})
+        return self.segments.filter(
+            F.col("bucket").isin(buckets) & F.col("term").isin(list(terms))
+        )
+
+    @staticmethod
+    def _decode_blocks(segs: DataFrame, with_positions: bool = False) -> DataFrame:
+        """The one segment decoder: ``(term, doc_id, tf, dl[,
+        positions])`` from segment block rows. One Arrow-batched pass,
+        numpy per block; the positions column (when requested) is
+        re-sliced per doc from the block payload without a
+        decode/re-encode round-trip."""
         cols = ["term", "n_docs", "docs", "tfs", "dls"] + (
             ["positions"] if with_positions else []
         )
@@ -630,8 +596,7 @@ class IndexReader:
         ]
         if want_pos:
             fields.append(T.StructField("positions", T.BinaryType(), False))
-        out = segs.mapInPandas(decode, schema=T.StructType(fields))
-        return self._minus_tombstones(out)
+        return segs.mapInPandas(decode, schema=T.StructType(fields))
 
     # -- match sets -------------------------------------------------------------
     def _match_set(self, node: P.Node) -> DataFrame:
@@ -902,7 +867,7 @@ class IndexReader:
         """Per-posting BM25 contribution over the scan's ``tf``/``dl``:
         :func:`bm25_tf_norm` evaluated on Columns (Spark only commutes
         the ``*``/``+`` operands, exact in IEEE), times the weight."""
-        return w * bm25_tf_norm(F.col("tf"), F.col("dl"), avgdl, self.k1, self.b)
+        return w * bm25_tf_norm(F.col("tf"), F.col("dl"), avgdl, BM25_K1, BM25_B)
 
     @staticmethod
     def _score_sum():
@@ -1120,7 +1085,7 @@ class IndexReader:
             return self._match_set(node).withColumn(
                 "score", F.lit(0.0).cast("double")
             )
-        avgdls = {t: self.field_avg_dl[self._field_of(t)] for t in weights}
+        avgdls = {t: self._avgdl(t) for t in weights}
         scored = (
             self.postings_for(list(weights))
             .withColumn(
@@ -1244,52 +1209,24 @@ class IndexReader:
 
         Runs as ONE small distributed job: a bucket+term-pruned block
         scan, TakeOrdered(n_blocks) on the stored block UBs, executor-
-        side decode of those blocks, tombstone removal by ANTI-JOIN
-        (tombstones are never collected to the driver), per-doc sum,
-        top-k. Only k scalar rows reach the driver."""
-        from ..index.build import term_bucket
-
-        buckets = sorted({term_bucket(t) for t in weights})
+        side decode of those blocks through the engine's one decoder,
+        tombstone removal by ANTI-JOIN (tombstones are never collected
+        to the driver), per-doc sum, top-k. Only k scalar rows reach the
+        driver."""
         wmap = self._lit_map({t: float(w) for t, w in weights.items()})
-        avgdl_map = self._lit_map(
-            {t: float(self.field_avg_dl[self._field_of(t)]) for t in weights}
-        )
+        avgdl_map = self._lit_map({t: self._avgdl(t) for t in weights})
         ub = wmap[F.col("term")] * bm25_tf_norm(
-            F.col("max_tf"), F.col("min_dl"), avgdl_map[F.col("term")], self.k1, self.b
+            F.col("max_tf"), F.col("min_dl"), avgdl_map[F.col("term")], BM25_K1, BM25_B
         )
         top_blocks = (
-            self.segments.filter(
-                F.col("bucket").isin(buckets) & F.col("term").isin(list(weights))
-            )
-            .select("term", "first_doc", "docs", "tfs", "dls", ub.alias("ub"))
-            .orderBy(F.desc("ub"), "term", "first_doc")  # deterministic under ties
+            self._segments_of(weights)
+            .orderBy(ub.desc(), "term", "first_doc")  # deterministic under ties
             .limit(n_blocks)
         )
-        w_map = dict(weights)
-        avgdls = {t: self.field_avg_dl[self._field_of(t)] for t in weights}
-        k1, b = self.k1, self.b
-
-        def decode(iterator):
-            from ..index import codec as C
-            from .wand import block_contrib
-
-            for pdf in iterator:
-                frames = []
-                for row in pdf.itertuples(index=False):
-                    contrib = block_contrib(
-                        bytes(row.tfs), bytes(row.dls),
-                        w_map[row.term], avgdls[row.term], k1, b,
-                    )
-                    frames.append(
-                        pd.DataFrame(
-                            {"doc_id": C.delta_decode(bytes(row.docs)), "contrib": contrib}
-                        )
-                    )
-                if frames:
-                    yield pd.concat(frames, ignore_index=True)
-
         contribs = self._minus_tombstones(
-            top_blocks.mapInPandas(decode, schema="doc_id long, contrib double")
+            self._decode_blocks(top_blocks)
+        ).withColumn(
+            "contrib", self._contrib(wmap[F.col("term")], avgdl_map[F.col("term")])
         )
         rows = (
             contribs.groupBy("doc_id")
@@ -1322,7 +1259,6 @@ class IndexReader:
         after
         an action, ``self.last_blocks_decoded.value`` reports how many
         blocks the bins actually decoded."""
-        from ..index.build import term_bucket
         from .wand import wand_bin
 
         flat_or = isinstance(node, P.Or) and all(isinstance(c, P.Term) for c in node.children)
@@ -1340,16 +1276,13 @@ class IndexReader:
         if n_bins is None:
             n_bins = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
         bin_width = max(1, -(-self.n_docs // n_bins))
-        buckets = sorted({term_bucket(t) for t in weights})
 
         # partition-pruned scan: bucket prunes directories, term prunes
         # row groups via dictionary/min-max. Only the columns the bin
         # kernel reads are shipped to the Python workers (positions, the
         # largest payload, never leaves the scan).
         segs = (
-            self.segments.filter(
-                F.col("bucket").isin(buckets) & F.col("term").isin(list(weights))
-            )
+            self._segments_of(weights)
             .select(
                 "term", "first_doc", "last_doc", "docs", "tfs", "dls", "max_tf", "min_dl"
             )
@@ -1364,8 +1297,7 @@ class IndexReader:
             )
         )
         w_map = dict(weights)
-        avg_dl, k1, b = self.avg_dl, self.k1, self.b
-        avg_dls = {t: self.field_avg_dl[self._field_of(t)] for t in weights}
+        avg_dls = {t: self._avgdl(t) for t in weights}
         kk = k
         bw = bin_width
         # global-θ seed (OR mode only: in AND mode a single-term partial
@@ -1404,9 +1336,8 @@ class IndexReader:
                 per_term.setdefault(t, (w_map[t], []))
             stats: dict = {}
             top = wand_bin(
-                per_term, lo, hi, kk, avg_dl, k1, b,
+                per_term, lo, hi, kk, avg_dls, BM25_K1, BM25_B,
                 mode=mode, theta0=theta0, exclude=exclude, stats=stats,
-                avg_dls=avg_dls,
             )
             blocks_acc.add(stats.get("blocks_decoded", 0))
             return pd.DataFrame(
@@ -1433,11 +1364,7 @@ class IndexReader:
                 T.StructField("score", T.DoubleType(), False),
             ]
         )
-        if (
-            self._tombstones is not None
-            and self._n_tombstones > self.BROADCAST_TOMBSTONES_MAX
-            and self._tombstone_bitmaps is not None
-        ):
+        if self._n_tombstones > self.BROADCAST_TOMBSTONES_MAX:
             # above the row-broadcast ceiling, cogroup the word-level
             # BITMAP masks instead of raw tombstone rows: the shuffled
             # side is ≤ min(16·n, universe/4) bytes per query (e.g.
@@ -1484,7 +1411,7 @@ class IndexReader:
                 .cogroup(masks.groupBy("bin"))
                 .applyInPandas(run_bin_with_masks, schema=out_schema)
             )
-        elif self._tombstones is not None:
+        elif self._n_tombstones:
             # tombstones reach each bin through a COGROUP on the same bin
             # key — each task sees only its own docID range's tombstones,
             # nothing rides in the closure, nothing touches the driver

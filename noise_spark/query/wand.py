@@ -30,9 +30,8 @@ def block_contrib(
 ) -> np.ndarray:
     """Per-doc BM25 contributions ``weight · tf_norm`` of one block, in
     block order — the single tfs/dls payload decode shared by the WAND
-    cursor, the single-term path and the engine's global-θ seed. Scoring
-    goes through ``scoring.bm25_tf_norm``, so it is bitwise the oracle's
-    expression."""
+    cursor and the single-term path. Scoring goes through
+    ``scoring.bm25_tf_norm``, so it is bitwise the oracle's expression."""
     tf = codec.varbyte_decode(tfs).astype(np.float64)
     dl = codec.varbyte_decode(dls).astype(np.float64)
     return weight * bm25_tf_norm(tf, dl, avg_dl, k1, b)
@@ -245,18 +244,18 @@ def wand_bin(
     lo: int,
     hi: int,
     k: int,
-    avg_dl: float,
+    avg_dls: dict[str, float],
     k1: float,
     b: float,
     mode: str = "or",
     theta0: float = 0.0,
     exclude: "np.ndarray | None" = None,
     stats: dict | None = None,
-    avg_dls: "dict[str, float] | None" = None,
 ) -> list[tuple[int, float]]:
     """Exact top-k of docs in [lo, hi) for the given terms.
 
-    ``term_blocks``: term → (weight, block rows). ``mode='and'`` requires
+    ``term_blocks``: term → (weight, block rows); ``avg_dls``: term → the
+    avg_dl of its field (BM25 is per-field). ``mode='and'`` requires
     all terms present. ``exclude``: tombstoned docIDs (masked at block
     decode). ``theta0``: a global score threshold that is a PROVEN lower
     bound on the kth-best overall score (seeded from a driver-side first
@@ -270,16 +269,10 @@ def wand_bin(
     if len(nonempty) == 1 and mode == "or":
         t, w, blocks = nonempty[0]
         return _single_term_topk(
-            w, blocks, lo, hi, k,
-            avg_dls.get(t, avg_dl) if avg_dls else avg_dl,
-            k1, b, theta0, exclude, stats,
+            w, blocks, lo, hi, k, avg_dls[t], k1, b, theta0, exclude, stats
         )
     cursors = [
-        _Cursor(
-            t, w, blocks, lo, hi,
-            avg_dls.get(t, avg_dl) if avg_dls else avg_dl,  # per-FIELD avg_dl
-            k1, b, exclude=exclude, stats=stats,
-        )
+        _Cursor(t, w, blocks, lo, hi, avg_dls[t], k1, b, exclude=exclude, stats=stats)
         for t, (w, blocks) in term_blocks.items()
         if blocks
     ]

@@ -6,9 +6,9 @@ query set under three delete-application strategies on fresh readers:
 
 - ``rows_broadcast`` — the small-regime default (tombstone rows under
   the 5M ceiling broadcast as-is); ground truth + the floor.
-- ``anti_join_shuffle`` — the legacy above-ceiling path (ceiling
-  patched to 0, bitmap stage hidden): every query shuffles the match
-  set against the tombstone rows.
+- ``anti_join_shuffle`` — the path above both ceilings (row and
+  bitmap ceilings patched to 0): every query shuffles the match set
+  against the tombstone rows.
 - ``bitmap_broadcast`` — the new above-ceiling path (ceiling 0,
   bitmaps on): a broadcast mask join, zero shuffle.
 
@@ -85,9 +85,10 @@ def main():
         ),
     }
 
-    def run(tag, ceiling, hide_bitmaps, force_shuffle=False):
-        old = IndexReader.BROADCAST_TOMBSTONES_MAX
+    def run(tag, ceiling, bitmap_ceiling, force_shuffle=False):
+        old = IndexReader.BROADCAST_TOMBSTONES_MAX, IndexReader.BROADCAST_BITMAP_MAX_WORDS
         IndexReader.BROADCAST_TOMBSTONES_MAX = ceiling
+        IndexReader.BROADCAST_BITMAP_MAX_WORDS = bitmap_ceiling
         # force_shuffle models the TRUE above-ceiling regime: at >5M
         # tombstone rows the side can't broadcast, so neither may AQE
         # here (at this test size AQE would auto-broadcast the rows and
@@ -102,8 +103,6 @@ def main():
                 spark.conf.set(k, v)
         try:
             r = IndexReader(spark, idx)
-            if hide_bitmaps:
-                r._tombstone_bitmaps = None
             res, secs = {}, {}
             for name, fn in queries.items():
                 best = None
@@ -115,14 +114,15 @@ def main():
                 secs[name] = round(best, 4)
             return res, secs
         finally:
-            IndexReader.BROADCAST_TOMBSTONES_MAX = old
+            IndexReader.BROADCAST_TOMBSTONES_MAX, IndexReader.BROADCAST_BITMAP_MAX_WORDS = old
             if force_shuffle:
                 for k, v in prev.items():
                     spark.conf.set(k, v) if v is not None else spark.conf.unset(k)
 
-    res_rows, sec_rows = run("rows_broadcast", 5_000_000, True)
-    res_anti, sec_anti = run("anti_join_shuffle", 0, True, force_shuffle=True)
-    res_bm, sec_bm = run("bitmap_broadcast", 0, False)
+    words = IndexReader.BROADCAST_BITMAP_MAX_WORDS
+    res_rows, sec_rows = run("rows_broadcast", 5_000_000, words)
+    res_anti, sec_anti = run("anti_join_shuffle", 0, 0, force_shuffle=True)
+    res_bm, sec_bm = run("bitmap_broadcast", 0, words)
     assert res_anti == res_rows, "anti-join path diverged"
     assert res_bm == res_rows, "bitmap path diverged"
 

@@ -162,31 +162,34 @@ def test_wand_mask_cogroup_sparse_bin(spark, tmp_path, monkeypatch):
     assert all(d not in (0, 63, 64, 199) for d, _ in got)
 
 
-def test_legacy_index_without_bitmaps_falls_back(spark, deleted_index, tmp_path, monkeypatch):
-    """A pre-bitmap manifest (stage absent) must still answer correctly
-    above the ceiling via the shuffling anti-join."""
+def test_pre_bitmap_manifest_is_refused(spark, deleted_index, tmp_path):
+    """A manifest from before the bitmap stage (tombstones without
+    ``tombstone_bitmaps``, no ``format``) is refused with a rebuild
+    message; the reader keeps no row-only branch for that layout. The
+    anti-join above the mask ceiling stays covered by
+    test_bitmap_broadcast_guard_falls_back_to_join."""
     import json
     import os
     import shutil
 
-    legacy = str(tmp_path / "legacy")
-    shutil.copytree(deleted_index, legacy)
     from noise_spark.index.catalog import IndexCatalog
 
+    legacy = str(tmp_path / "legacy")
+    shutil.copytree(deleted_index, legacy)
     cat = IndexCatalog(legacy)
     man = cat.current_manifest()
+    assert "tombstones" in man["stages"]
     del man["stages"]["tombstone_bitmaps"]
+    del man["format"]
     # rewrite the current manifest in place (test-only surgery)
-    cur = os.path.join(legacy, "_CURRENT")
-    with open(cur) as f:
+    with open(os.path.join(legacy, cat.CURRENT)) as f:
         name = f.read().strip()
-    with open(os.path.join(legacy, "_manifests", name), "w") as f:
+    with open(os.path.join(cat.manifest_dir, name), "w") as f:
         json.dump(man, f)
-    monkeypatch.setattr(IndexReader, "BROADCAST_TOMBSTONES_MAX", 0)
-    reader = IndexReader(spark, legacy)
-    assert reader._tombstone_bitmaps is None
-    docs = {r["doc_id"] for r in reader.docs.select("doc_id").collect()}
-    assert docs and all(d % 5 == 0 for d in docs)
+    with pytest.raises(ValueError, match="rebuild the index"):
+        IndexReader(spark, legacy)
+    # the source index is untouched and still opens
+    assert IndexReader(spark, deleted_index)._tombstone_bitmaps is not None
 
 
 def test_bitmap_broadcast_guard_falls_back_to_join(spark, deleted_index, monkeypatch):

@@ -13,11 +13,14 @@ import pytest
 from noise_spark.index.catalog import CommitConflict, IndexCatalog
 
 
-def _write_stage(root, name, content=b"x"):
+def _write_stage(root, name):
+    # a one-row parquet file: commits read row counts from the footers
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     d = os.path.join(root, name)
     os.makedirs(d, exist_ok=True)
-    with open(os.path.join(d, "part-0.bin"), "wb") as f:
-        f.write(content)
+    pq.write_table(pa.table({"x": [1]}), os.path.join(d, "part-0.parquet"))
     return d
 
 

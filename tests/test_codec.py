@@ -84,7 +84,7 @@ def test_block_builder_roundtrip_property(posting, block_size):
     pdf = pd.DataFrame(
         {"doc_id": ids, "tf": tfs, "dl": dls, "positions": pos_rows}
     ).iloc[list(order)]
-    out = _make_block_builder(block_size, 16)(("t", 3), pdf)
+    out = _make_block_builder(block_size)(("t", 3), pdf)
 
     by_doc = sorted(zip(ids, tfs, dls, pos_rows))
     assert len(out) == -(-len(ids) // block_size)
@@ -100,4 +100,4 @@ def test_block_builder_roundtrip_property(posting, block_size):
         assert (blk.max_tf, blk.min_dl) == (max(s_tfs), min(s_dls))
         assert (blk.tf_sum, blk.n_docs) == (sum(s_tfs), len(sl))
         assert blk.codec == "varbyte"
-        assert blk.bucket == term_bucket("t", 16)
+        assert blk.bucket == term_bucket("t")

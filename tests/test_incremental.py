@@ -291,16 +291,16 @@ def test_compaction_policy(spark, inc_index, tmp_path):
 
 def test_high_doc_id_is_manifest_only(spark, tmp_path):
     """The watermark must resolve from commit metrics + lineage with
-    ZERO Spark jobs (constant-time driver read at 100 TB) — proven by
-    passing spark=None: any scan fallback would crash. Covers dense
-    numbering (offset+rows-1), appended generations, and a compacted
-    index with caller-provided preserved ids (max_doc_id metric)."""
+    ZERO Spark jobs (constant-time driver read at 100 TB) — it takes no
+    Spark session at all. Covers dense numbering (offset+rows-1),
+    appended generations, and a compacted index with caller-provided
+    preserved ids (max_doc_id metric)."""
     from noise_spark.index.incremental import high_doc_id
 
     idx = str(tmp_path / "idx")
     pages = generate_pages(spark, 120, seed=7, partitions=4)
     build_index(spark, pages, idx, BuildConfig(block_size=64))
-    assert high_doc_id(None, idx) == 119
+    assert high_doc_id(idx) == 119
 
     from pyspark.sql import functions as F
 
@@ -310,56 +310,51 @@ def test_high_doc_id_is_manifest_only(spark, tmp_path):
         .limit(30)
     )
     append_docs(spark, idx, more, BuildConfig(block_size=64))
-    assert high_doc_id(None, idx) == 149
+    assert high_doc_id(idx) == 149
 
     # compaction preserves ids (gaps possible) → explicit max_doc_id
     out = str(tmp_path / "compacted")
     delete_docs(spark, idx, pages.limit(5).select("url"))
     compact(spark, idx, out)
-    assert high_doc_id(None, out) == 149
+    assert high_doc_id(out) == 149
 
 
-def test_high_doc_id_legacy_manifest_scans(spark, tmp_path):
-    """A pre-watermark-contract manifest (doc_id_offset committed for
-    caller-provided GAPPED ids, no max_doc_id / dense_ids markers) must
-    take the scan fallback — offset+rows-1 arithmetic would understate
-    the watermark and the next append would reuse live doc_ids."""
+def test_manifest_without_format_is_refused(spark, tmp_path):
+    """The catalog supports ONE manifest format: a committed manifest
+    without it (written before the format existed) is refused with a
+    rebuild message by every reader of the manifest — the query reader,
+    the append watermark and a resumed build — instead of each one
+    branching on the old layout."""
     import json
     import os
 
-    import pandas as pd
-
-    from noise_spark.index.catalog import IndexCatalog
+    from noise_spark.index.catalog import MANIFEST_FORMAT, IndexCatalog
     from noise_spark.index.incremental import high_doc_id
 
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            [(5, "u5", "five words here"), (149, "u149", "other doc text")],
-            columns=["doc_id", "url", "text"],
-        )
-    )
-    idx = str(tmp_path / "legacy")
-    build_index(
-        spark, df, idx, BuildConfig(analyzer="whitespace", doc_id_col="doc_id")
-    )
-    # modern manifest: metadata-only (spark=None proves no scan)
-    assert high_doc_id(None, idx) == 149
-
-    # forge a legacy manifest: strip the r4 watermark metrics
+    pages = generate_pages(spark, 60, seed=5, partitions=2)
+    idx = str(tmp_path / "old")
+    cfg = BuildConfig(analyzer="whitespace", block_size=64)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        build_index(spark, pages, idx, cfg, fail_after_stage="segments")
     cat = IndexCatalog(idx)
-    ptr = os.path.join(idx, cat.CURRENT)
-    with open(ptr) as f:
-        name = f.read().strip()
-    mpath = os.path.join(cat.manifest_dir, name)
-    with open(mpath) as f:
-        manifest = json.load(f)
-    for info in manifest["stages"].values():
-        info.get("metrics", {}).pop("max_doc_id", None)
-        info.get("metrics", {}).pop("dense_ids", None)
+    manifest = cat.current_manifest()
+    assert manifest["format"] == MANIFEST_FORMAT
+
+    with open(os.path.join(idx, cat.CURRENT)) as f:
+        mpath = os.path.join(cat.manifest_dir, f.read().strip())
+    del manifest["format"]
     with open(mpath, "w") as f:
         json.dump(manifest, f)
-    # arithmetic would give offset(0)+rows(2)-1 == 1; the scan must win
-    assert high_doc_id(spark, idx) == 149
+
+    with pytest.raises(ValueError, match="rebuild the index"):
+        IndexReader(spark, idx)
+    with pytest.raises(ValueError, match="rebuild the index"):
+        high_doc_id(idx)
+    with pytest.raises(ValueError, match="rebuild the index"):
+        build_index(spark, pages, idx, cfg)  # resume of the torn build
+    # nothing was committed on top of the refused manifest
+    with open(os.path.join(idx, cat.CURRENT)) as f:
+        assert os.path.join(cat.manifest_dir, f.read().strip()) == mpath
 
 
 def test_append_auto_fields_uses_index_fields(spark, tmp_path):

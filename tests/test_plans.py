@@ -294,17 +294,41 @@ def test_reader_reuses_snapshot_relations(plan_reader, monkeypatch):
     assert calls == [], "search_many"
 
 
-def test_reader_open_runs_no_spark_job(plan_reader):
-    """Opening a reader on an index without tombstones runs no Spark
-    job: corpus stats are read on the driver and every table relation
-    is resolved lazily, on first use."""
-    sc = plan_reader.spark.sparkContext
-    group = "test_reader_open_runs_no_spark_job"
+def _open_without_jobs(spark, index_dir: str, group: str) -> IndexReader:
+    sc = spark.sparkContext
     sc.setJobGroup(group, "reader open")
     try:
-        reader = IndexReader(plan_reader.spark, plan_reader.cat.root)
+        reader = IndexReader(spark, index_dir)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setJobDescription(None)
-    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert sc.statusTracker().getJobIdsForGroup(group) == [], group
+    return reader
+
+
+def test_reader_open_runs_no_spark_job(plan_reader, tmp_path):
+    """Opening a reader runs no Spark job, with or without tombstones:
+    corpus stats are read on the driver, tombstone counts come from the
+    committed lineage, and every table relation (tombstones included) is
+    resolved lazily, on first use. The lazily opened tombstones still
+    exclude the deleted docs from the doc store and from WAND."""
+    from pyspark.sql import functions as F
+
+    from noise_spark.corpus import generate_pages
+    from noise_spark.index.incremental import delete_docs
+    from noise_spark.query import plan as P
+
+    spark = plan_reader.spark
+    reader = _open_without_jobs(spark, plan_reader.cat.root, "open_plain")
     assert reader.n_docs == 300
+
+    idx = str(tmp_path / "deleted")
+    build_index(spark, generate_pages(spark, 200, seed=42, partitions=4), idx, BuildConfig(block_size=64))
+    victims = IndexReader(spark, idx).docs.filter(F.col("doc_id") % 4 == 0).select("url")
+    assert delete_docs(spark, idx, victims)["deleted"] == 50
+    reader = _open_without_jobs(spark, idx, "open_deleted")
+    assert reader.n_docs == 150
+    docs = {r["doc_id"] for r in reader.docs.select("doc_id").collect()}
+    assert docs == {d for d in range(200) if d % 4}
+    top = reader.query(P.Or((P.Term("w00000"), P.Term("w00001"))), k=20).collect()
+    assert len(top) == 20 and all(r["doc_id"] % 4 for r in top)

@@ -78,7 +78,7 @@ def test_wand_bin_unit_pruning():
             truth[d] = truth.get(d, 0.0) + x
 
     want = sorted(truth.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
-    got = wand_bin(terms, 0, n_docs, 10, avg_dl, k1, b, mode="or")
+    got = wand_bin(terms, 0, n_docs, 10, dict.fromkeys(terms, avg_dl), k1, b, mode="or")
     assert [d for d, _ in got] == [d for d, _ in want]
     for (gd, gs), (wd, ws) in zip(got, want):
         assert gs == pytest.approx(ws, rel=1e-12)
@@ -131,11 +131,12 @@ def test_wand_bin_theta0_exact():
             }
         )
     terms = {"t": (1.5, rows)}
-    base = wand_bin(terms, 0, 1000, 10, avg_dl, k1, b, mode="or")
+    avg_dls = {"t": avg_dl}
+    base = wand_bin(terms, 0, 1000, 10, avg_dls, k1, b, mode="or")
     kth = base[-1][1]
     stats: dict = {}
     seeded = wand_bin(
-        terms, 0, 1000, 10, avg_dl, k1, b, mode="or",
+        terms, 0, 1000, 10, avg_dls, k1, b, mode="or",
         theta0=kth * (1.0 - 1e-9), stats=stats,
     )
     assert seeded == base
