@@ -80,19 +80,19 @@ def extract_features(
 
     ``decoder(payload) -> list[float]`` runs once per payload inside a
     ``mapInPandas`` batch (the only place Python touches rows, amortized
-    per Arrow batch). Without an injected decoder this calls the stub
-    and raises — the plumbing is still exercised by tests via a
+    per Arrow batch). Without an injected decoder the stub raises
+    ``NotImplementedError`` here, on the driver, before any Spark job
+    starts — the plumbing is still exercised by tests via a
     deterministic fake decoder."""
+    if decoder is None:
+        decode_image(b"")  # raises NotImplementedError
     dec = decoder
 
     def fn(iterator):
         for pdf in iterator:
             feats = []
             for payload in pdf[payload_col]:
-                raw = bytes(payload)
-                if dec is None:
-                    decode_image(raw)  # raises NotImplementedError
-                feats.append([float(x) for x in dec(raw)][:feature_dim])
+                feats.append([float(x) for x in dec(bytes(payload))][:feature_dim])
             yield pd.DataFrame(
                 {
                     "media_id": pdf[id_col],

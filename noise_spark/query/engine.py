@@ -8,31 +8,29 @@ operations —
   the deterministic term bucket partition)
 - match sets          → AND = semi joins, OR = union, NOT = left_anti
   join (filter-only plans and trees mixing terms with field predicates)
-- scored queries      → ONE lowering per plan shape, shared by
-  :meth:`IndexReader.search` (a one-query batch) and
-  :meth:`IndexReader.search_many` (the whole batch): ``_tree_scan``
-  evaluates term-only boolean trees as bit-tests over a per-doc
-  matched-term mask in one segment decode, ``_positional_scan`` scores
-  top-level phrase / proximity in one positional decode plus one
-  Arrow-batched position verify. Both return an unordered
-  ``(query_id, doc_id, score)`` set.
-- scoring             → BM25 contributions as JVM-side column
-  expressions built by :func:`noise_spark.scoring.bm25_tf_norm`; per-doc
-  summation in ASCENDING TERM ORDER via
-  ``aggregate(array_sort(collect_list(...)))`` so floating-point results
-  are bitwise-reproducible across partitionings and parallelism levels
-  (and bitwise-comparable to the pure-Python oracle)
-- top-k               → ``orderBy(score desc, doc_id asc).limit(k)``,
-  which Spark executes as TakeOrderedAndProject (per-partition top-k +
-  driver merge; the reference's incremental sort/merge buffer,
-  ``src/query.rs:511-553``); ``search_many`` takes a two-stage window
-  top-k per query instead
+- scored queries      → ONE plan shape for every term-only tree and
+  top-level phrase / proximity, single (:meth:`IndexReader.search`) or
+  batched (:meth:`IndexReader.search_many`): the bucket-pruned segment
+  scan exploded to docID bins, ONE ``groupBy("bin")`` into the numpy
+  kernel ``wand.score_bin`` (per-bin exact top-k, or every match), then
+  ``orderBy(score desc, doc_id asc).limit(k)`` — a TakeOrderedAndProject
+  (the reference's incremental sort/merge buffer,
+  ``src/query.rs:511-553``) — or a per-query window top-k for a batch.
+  The kernel sums ``w · tf_norm`` from :func:`noise_spark.scoring.bm25_tf_norm`
+  in ASCENDING TERM ORDER, so scores are bitwise-reproducible across
+  partitionings and bitwise-comparable to the pure-Python oracle
+- other scored plans  → BM25 contributions as JVM-side column
+  expressions built by the same ``bm25_tf_norm``, summed in ascending
+  term order via ``aggregate(array_sort(collect_list(...)))``, left-
+  joined to the match set
 """
 
 from __future__ import annotations
 
+from dataclasses import replace
 from functools import cached_property
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,59 +40,6 @@ from .. import BM25_B, BM25_K1
 from ..index.catalog import IndexCatalog, stage_name, visible_generations
 from ..scoring import bm25_idf, bm25_tf_norm
 from . import plan as P
-
-
-def _positions_satisfy(lists, phrase: bool, window: int) -> bool:
-    """Does one doc's set of per-term position lists satisfy the
-    pattern? ``lists`` holds one sorted numpy int array per query term
-    (in query order). The one phrase/proximity matcher: the positional
-    scan's verify and the element-word verify both call it."""
-    import numpy as np
-
-    if phrase:
-        # vectorized consecutive-position intersection: position lists
-        # are sorted (ascending varbyte deltas), so each step is one
-        # searchsorted probe of cand+i into list i
-        cand = lists[0]
-        for i, pl in enumerate(lists[1:], start=1):
-            if cand.size == 0:
-                return False
-            want = cand + i
-            idx = np.searchsorted(pl, want)
-            valid = idx < pl.size
-            keep = np.zeros(cand.size, dtype=bool)
-            keep[valid] = pl[idx[valid]] == want[valid]
-            cand = cand[keep]
-        return cand.size > 0
-    if len(lists) == 2:
-        # two-term proximity: ∃ (p, q) with |q-p| <= window — one
-        # searchsorted window probe per anchor position, fully
-        # vectorized over l0
-        l0, l1 = lists
-        lo_i = np.searchsorted(l1, l0 - window, side="left")
-        hi_i = np.searchsorted(l1, l0 + window, side="right")
-        return bool((hi_i > lo_i).any())
-    # k>2 terms: minimal-window sweep over the merged event list (the
-    # reference's DistanceFilter sliding window, src/filters.rs:588-726)
-    events = sorted((p, i) for i, pl in enumerate(lists) for p in pl)
-    k = len(lists)
-    need: dict[int, int] = {}
-    have = 0
-    lo = 0
-    for hi in range(len(events)):
-        ti = events[hi][1]
-        need[ti] = need.get(ti, 0) + 1
-        if need[ti] == 1:
-            have += 1
-        while have == k:
-            if events[hi][0] - events[lo][0] <= window:
-                return True
-            tlo = events[lo][1]
-            need[tlo] -= 1
-            if need[tlo] == 0:
-                have -= 1
-            lo += 1
-    return False
 
 
 def _read_rows(path: str) -> list[dict]:
@@ -261,6 +206,7 @@ class IndexReader:
             import numpy as np
 
             from ..analysis.tokenizer import analyze
+            from .wand import positions_satisfy
 
             def toks_of(x):
                 if isinstance(x, str):
@@ -276,7 +222,7 @@ class IndexReader:
                 for i, w in enumerate(toks):
                     at.setdefault(w, []).append(i)
                 lists = [np.asarray(at.get(t, ()), dtype=np.int64) for t in terms]
-                return _positions_satisfy(lists, window is None, window or 0)
+                return positions_satisfy(lists, window is None, window or 0)
 
             def ev(t, toks):
                 if t[0] == "word":
@@ -526,22 +472,20 @@ class IndexReader:
                 self._df_cache[t] = got.get(t, 0)
         return {t: self._df_cache[t] for t in terms if self._df_cache.get(t, 0) > 0}
 
-    def postings_for(self, terms: list[str], with_positions: bool = False) -> DataFrame:
+    def postings_for(self, terms: list[str]) -> DataFrame:
         """Term-scoped postings decoded from segments: the scan is pruned
         by the deterministic term-bucket partition, then by term via
         parquet dictionary/min-max — only matching blocks are decoded."""
-        return self._decode_segments(list(terms), with_positions=with_positions)
+        return self._decode_segments(list(terms))
 
-    def _decode_segments(
-        self, terms: list[str] | None, with_positions: bool = False
-    ) -> DataFrame:
-        """Live ``(term, doc_id, tf, dl[, positions])`` postings of
+    def _decode_segments(self, terms: list[str] | None) -> DataFrame:
+        """Live ``(term, doc_id, tf, dl)`` postings of
         ``terms`` (all terms when None): a bucket- and term-pruned
         segment scan through :meth:`_decode_blocks`, minus tombstones."""
         segs = self.segments
         if terms is not None:
             segs = self._segments_of(terms)
-        return self._minus_tombstones(self._decode_blocks(segs, with_positions))
+        return self._minus_tombstones(self._decode_blocks(segs))
 
     def _segments_of(self, terms) -> DataFrame:
         """Segment rows of ``terms``: the bucket partition prunes
@@ -554,17 +498,12 @@ class IndexReader:
         )
 
     @staticmethod
-    def _decode_blocks(segs: DataFrame, with_positions: bool = False) -> DataFrame:
-        """The one segment decoder: ``(term, doc_id, tf, dl[,
-        positions])`` from segment block rows. One Arrow-batched pass,
-        numpy per block; the positions column (when requested) is
-        re-sliced per doc from the block payload without a
-        decode/re-encode round-trip."""
-        cols = ["term", "n_docs", "docs", "tfs", "dls"] + (
-            ["positions"] if with_positions else []
-        )
-        segs = segs.select(*cols)
-        want_pos = with_positions
+    def _decode_blocks(segs: DataFrame) -> DataFrame:
+        """The one segment-to-postings decoder: ``(term, doc_id, tf, dl)``
+        from segment block rows, one Arrow-batched pass, numpy per block
+        (the match-set and filter lowerings; scored top-k decodes inside
+        the kernel instead)."""
+        segs = segs.select("term", "docs", "tfs", "dls")
 
         def decode(iterator):
             import numpy as np
@@ -580,10 +519,6 @@ class IndexReader:
                         "tf": C.varbyte_decode(bytes(row.tfs)).astype(np.int32),
                         "dl": C.varbyte_decode(bytes(row.dls)).astype(np.int32),
                     }
-                    if want_pos:
-                        data["positions"] = C.split_positions(
-                            bytes(row.positions), int(row.n_docs)
-                        )
                     frames.append(pd.DataFrame(data))
                 if frames:
                     yield pd.concat(frames, ignore_index=True)
@@ -594,8 +529,6 @@ class IndexReader:
             T.StructField("tf", T.IntegerType(), False),
             T.StructField("dl", T.IntegerType(), False),
         ]
-        if want_pos:
-            fields.append(T.StructField("positions", T.BinaryType(), False))
         return segs.mapInPandas(decode, schema=T.StructType(fields))
 
     # -- match sets -------------------------------------------------------------
@@ -756,26 +689,26 @@ class IndexReader:
         )
 
     def _positional_match(self, terms: list[str], phrase: bool, window: int = 0) -> DataFrame:
-        """Docs where ``terms`` occur consecutively (phrase) or within an
-        N-word window (proximity): the positional scan with every weight
-        0.0, keeping only the doc ids."""
+        """Docs where ``terms`` (index keys) occur consecutively (phrase)
+        or within an N-word window (proximity): the kernel's positional
+        plan with no scoring key, keeping only the doc ids."""
+        from .wand import BinQuery
+
         if not self.has_positions:
             raise ValueError(
                 "index was built with store_positions=False — phrase/"
                 "proximity queries need position payloads (rebuild with "
                 "BuildConfig(store_positions=True))"
             )
-        spec = (list(terms), phrase, window, dict.fromkeys(terms, 0.0))
-        return self._positional_scan({"q": spec}).select("doc_id")
+        q = BinQuery(("pos", list(terms), phrase, window), {}, {}, None)
+        return self._run_bins({"q": q}).select("doc_id")
 
-    # -- scored lowerings, shared by search and search_many ------------------
-    # A term-only tree (Term / Or / And / Not nested to any depth) needs
-    # exactly ONE bucket-pruned segment decode: per-(query, doc)
-    # matched-term BITMASK via bit_or + JVM long bit-tests for the
-    # boolean, and the bitwise-pinned BM25 sum in the same aggregation
-    # (no match-set joins: AND would be 2 scans + join, NOT 3 scans). A
-    # top-level phrase/proximity needs ONE positional decode. Each
-    # builder takes a batch of queries; search passes a batch of one.
+    # -- scored lowering: the per-bin kernel --------------------------------------
+    # Every term-only tree and every top-level phrase/proximity scores in
+    # ONE plan shape, single or batched: a bucket-pruned segment scan
+    # exploded to docID bins, ONE groupBy("bin") into the numpy kernel
+    # (wand.score_bin), then a top-k. Per-query parameters ride in the
+    # pickled closure, so the plan holds no literal maps.
 
     @staticmethod
     def _term_only(node: P.Node) -> bool:
@@ -793,8 +726,8 @@ class IndexReader:
 
     def _tree_keys(self, node: P.Node) -> set[str]:
         """Every index key a term-only tree references (both arms of a
-        NOT — negative-arm terms must join the scan as weightless
-        markers so the match expression can see them)."""
+        NOT — negative-arm terms are read as weightless markers so the
+        tree can test them)."""
         if isinstance(node, P.Term):
             return {self._key(node.term, node.field)}
         if isinstance(node, (P.Or, P.And)):
@@ -804,19 +737,18 @@ class IndexReader:
             return out
         return self._tree_keys(node.positive) | self._tree_keys(node.negative)
 
-    def _tree_expr(self, node: P.Node, mask, qbits: dict[str, int]):
-        """Lower a term-only boolean tree to JVM long bit-tests over the
-        doc's matched-term bitmask: Term → ``mask & bit != 0``, and
-        sibling Term children of an Or/And merge into ONE mask
-        comparison (``mask & m != 0`` any-of / ``mask & m == m``
-        all-of), so a flat query is a single long compare. Absent
-        (df=0) terms simply never set their bit, so they evaluate
-        correctly for free (an absent AND arm is unsatisfiable, an
-        absent OR arm contributes nothing, an absent negative arm
-        subtracts nothing)."""
+    def _tree_bits(self, node: P.Node, qbits: dict[str, int]) -> tuple:
+        """A term-only boolean tree as bit tests over a doc's
+        matched-key mask, for the kernel: Term → ``("any", bit)``, and
+        sibling Term children of an Or/And merge into ONE test
+        (``("any", m)`` any-of / ``("all", m)`` all-of), so a flat query
+        is a single compare; other children nest as ``("or" | "and",
+        [exprs])`` and ``("not", positive, negative)``. Absent (df=0)
+        terms never set their bit, so they evaluate correctly for free
+        (an absent AND arm is unsatisfiable, an absent OR arm contributes
+        nothing, an absent negative arm subtracts nothing)."""
         if isinstance(node, P.Term):
-            b = qbits[self._key(node.term, node.field)]
-            return mask.bitwiseAND(F.lit(b)) != 0
+            return ("any", qbits[self._key(node.term, node.field)])
         if isinstance(node, (P.Or, P.And)):
             is_or = isinstance(node, P.Or)
             tb = 0
@@ -825,17 +757,11 @@ class IndexReader:
                 if isinstance(c, P.Term):
                     tb |= qbits[self._key(c.term, c.field)]
                 else:
-                    exprs.append(self._tree_expr(c, mask, qbits))
+                    exprs.append(self._tree_bits(c, qbits))
             if tb:
-                m = mask.bitwiseAND(F.lit(tb))
-                exprs.insert(0, (m != 0) if is_or else (m == F.lit(tb)))
-            e = exprs[0]
-            for e2 in exprs[1:]:
-                e = (e | e2) if is_or else (e & e2)
-            return e
-        return self._tree_expr(node.positive, mask, qbits) & ~self._tree_expr(
-            node.negative, mask, qbits
-        )
+                exprs.insert(0, ("any" if is_or else "all", tb))
+            return exprs[0] if len(exprs) == 1 else ("or" if is_or else "and", exprs)
+        return ("not", self._tree_bits(node.positive, qbits), self._tree_bits(node.negative, qbits))
 
     @staticmethod
     def _or_of_terms(node: P.Node) -> bool:
@@ -845,14 +771,6 @@ class IndexReader:
         return isinstance(node, P.Or) and all(
             IndexReader._or_of_terms(c) for c in node.children
         )
-
-    @staticmethod
-    def _contains_not(node: P.Node) -> bool:
-        if isinstance(node, P.Not):
-            return True
-        if isinstance(node, (P.Or, P.And)):
-            return any(IndexReader._contains_not(c) for c in node.children)
-        return False
 
     @staticmethod
     def _lit_map(d: dict):
@@ -880,35 +798,6 @@ class IndexReader:
             lambda acc, x: acc + x["contrib"],
         ).alias("score")
 
-    @staticmethod
-    def _fan_out(scan: DataFrame, by_term: dict[str, list[tuple]], fields) -> DataFrame:
-        """One row per (posting, query using its term), carrying that
-        query's ``fields`` (``query_id`` first). The per-query values are
-        driver-known, so they ship as a literal map term →
-        array<struct> and an inner explode does the fan-out — no lookup
-        table, no join."""
-        casts = {"query_id": "string", "w": "double", "avgdl": "double", "bit": "long"}
-        m = F.create_map(
-            *[
-                x
-                for t, rows in by_term.items()
-                for x in (
-                    F.lit(t),
-                    F.array(
-                        *[
-                            F.struct(
-                                *[F.lit(v).cast(casts[f]).alias(f) for f, v in zip(fields, r)]
-                            )
-                            for r in rows
-                        ]
-                    ),
-                )
-            ]
-        )
-        return scan.withColumn("_q", F.explode(m[F.col("term")])).select(
-            *scan.columns, *[F.col(f"_q.{f}").alias(f) for f in fields]
-        )
-
     def _empty_scored(self) -> DataFrame:
         return self.spark.createDataFrame([], "query_id string, doc_id long, score double")
 
@@ -916,115 +805,179 @@ class IndexReader:
         """A term-only tree that fits one signed long of query-local bits."""
         return self._term_only(node) and len(self._tree_keys(node)) < 63
 
-    def _tree_scan(self, trees: dict[str, P.Node]) -> DataFrame:
-        """Scored ``(query_id, doc_id, score)`` of a batch of term-only
-        trees (:meth:`_tree_shaped`): ONE bucket-pruned decode over the
-        union of their keys, fanned out per query, ONE groupBy. Each
-        tree's boolean is long bit-tests over the ``bit_or`` of its
-        matched-term bits; negative-arm keys join the scan as marker rows
-        with w=0.0 (adding +0.0 to the running sum is an IEEE identity).
-        Shortcuts, taken when the whole batch allows them: one key and no
-        NOT per tree → one row per (query, doc) since tf is aggregated at
-        build, so the score IS the contribution (the fold would add it to
-        0.0) and no aggregate runs; only Or of Terms → every reached doc
-        matches, no bit column or mask."""
-        dfs = self.term_dfs(
-            sorted({t for node in trees.values() for t in self._term_boosts(node)})
-        )
-        by_term: dict[str, list[tuple]] = {}
-        match = None
-        single = flat_or = True
-        for qid, node in trees.items():
-            boosts = self._term_boosts(node)
-            if not any(t in dfs for t in boosts):
-                # every positive term is absent (df=0): no doc can match
-                continue
-            keys = sorted(self._tree_keys(node))
-            qbits = {t: 1 << i for i, t in enumerate(keys)}
-            for t in keys:
-                w = bm25_idf(self.n_docs, dfs[t]) * boosts[t] if t in boosts and t in dfs else 0.0
-                by_term.setdefault(t, []).append((qid, w, self._avgdl(t), qbits[t]))
-            single &= len(keys) == 1 and not self._contains_not(node)
-            flat_or &= self._or_of_terms(node)
-            e = (F.col("query_id") == qid) & self._tree_expr(node, F.col("_mask"), qbits)
-            match = e if match is None else match | e
-        if not by_term:
-            return self._empty_scored()
-        scan = self._fan_out(
-            self.postings_for(sorted(by_term)), by_term, ("query_id", "w", "avgdl", "bit")
-        ).withColumn("contrib", self._contrib(F.col("w"), F.col("avgdl")))
-        if single:
-            return scan.select("query_id", "doc_id", F.col("contrib").alias("score"))
-        if flat_or:
-            return scan.groupBy("query_id", "doc_id").agg(self._score_sum())
-        return (
-            scan.groupBy("query_id", "doc_id")
-            .agg(self._score_sum(), F.bit_or("bit").alias("_mask"))
-            .filter(match)
-            .select("query_id", "doc_id", "score")
-        )
+    def _kernel_shaped(self, node: P.Node) -> bool:
+        """Plans the kernel scores: term-only trees, and top-level
+        phrase / proximity on an index that stores positions."""
+        if isinstance(node, (P.Phrase, P.Proximity)):
+            return self.has_positions
+        return self._tree_shaped(node)
 
-    def _positional_spec(self, node: P.Node, dfs: dict[str, int]):
-        """``(keys in query order, is_phrase, window, weights)`` of a
-        Phrase/Proximity for :meth:`_positional_scan`, or None when a
-        term is absent (the pattern can match nothing)."""
+    def _bin_query(self, node: P.Node, dfs: dict[str, int], k: int | None):
+        """The kernel's :class:`~.wand.BinQuery` of a kernel-shaped plan,
+        or None when the plan can match nothing (an absent phrase or AND
+        term, or no positive term in the corpus)."""
+        from .wand import BinQuery
+
         boosts = self._term_boosts(node)
-        if any(t not in dfs for t in boosts):
+        weights = {t: bm25_idf(self.n_docs, dfs[t]) * boosts[t] for t in boosts if t in dfs}
+        if isinstance(node, (P.Phrase, P.Proximity)):
+            if len(weights) < len(boosts):
+                return None
+            keys = [self._key(t, node.field) for t in node.terms]
+            match = ("pos", keys, isinstance(node, P.Phrase), getattr(node, "window", 0))
+        elif not weights:
             return None
-        return (
-            [self._key(t, node.field) for t in node.terms],
-            isinstance(node, P.Phrase),
-            getattr(node, "window", 0),
-            {t: bm25_idf(self.n_docs, dfs[t]) * boosts[t] for t in boosts},
-        )
+        elif self._or_of_terms(node):
+            match = ("or", sorted(weights))
+        elif isinstance(node, P.And) and all(isinstance(c, P.Term) for c in node.children):
+            if len(weights) < len(boosts):
+                return None
+            match = ("and", sorted(weights))
+        else:
+            keys = sorted(self._tree_keys(node))
+            match = ("tree", keys, self._tree_bits(node, {t: 1 << i for i, t in enumerate(keys)}))
+        return BinQuery(match, weights, {t: self._avgdl(t) for t in weights}, k)
 
-    def _positional_scan(self, specs: dict[str, tuple]) -> DataFrame:
+    def _kernel(
+        self,
+        plans: dict[str, P.Node],
+        k: int | None,
+        n_bins: int | None = None,
+        seed_theta: bool | None = None,
+    ) -> DataFrame:
         """Scored ``(query_id, doc_id, score)`` of a batch of
-        phrase/proximity patterns (``query_id →`` :meth:`_positional_spec`):
-        ONE positional decode over the union of their terms, fanned out
-        per query; the groupBy sums the score and collects the per-term
-        position payloads, and docs holding every distinct term take ONE
-        Arrow-batched verify of their query's pattern."""
-        by_term: dict[str, list[tuple]] = {}
-        for qid, (_, _, _, weights) in specs.items():
-            for t, w in weights.items():
-                by_term.setdefault(t, []).append((qid, w, self._avgdl(t)))
-        n_terms = {qid: len(spec[3]) for qid, spec in specs.items()}
-        grouped = (
-            self._fan_out(
-                self._decode_segments(sorted(by_term), with_positions=True),
-                by_term,
-                ("query_id", "w", "avgdl"),
-            )
-            .withColumn("contrib", self._contrib(F.col("w"), F.col("avgdl")))
-            .groupBy("query_id", "doc_id")
-            .agg(
-                self._score_sum(),
-                F.count("*").alias("_nm"),
-                F.map_from_entries(
-                    F.collect_list(F.struct("term", "positions"))
-                ).alias("posmap"),
-            )
-            .filter(F.col("_nm") == self._lit_map(n_terms)[F.col("query_id")])
-            .select("query_id", "doc_id", "score", "posmap")
+        kernel-shaped plans: each plan's exact top-k of every bin, or
+        every match when ``k`` is None.
+
+        A lone flat OR of several terms may first seed a global θ₀
+        (:meth:`_seed_theta`) so every bin skips from its first block.
+        ``seed_theta``: None = adaptive, on when the terms hold at least
+        ``SEED_MIN_POSTINGS`` postings (below that the seed job's driver
+        round-trip costs more than the skipped decodes save); True =
+        force on; False = off. Rank identity is unaffected either way (θ
+        only prunes)."""
+        dfs = self.term_dfs(
+            sorted({t for node in plans.values() for t in self._term_boosts(node)})
         )
-        patterns = {qid: spec[:3] for qid, spec in specs.items()}
+        queries = {}
+        for qid, node in plans.items():
+            q = self._bin_query(node, dfs, k)
+            if q is not None:
+                queries[qid] = q
+        if len(queries) == 1 and k is not None:
+            ((qid, q),) = queries.items()
+            if q.match[0] == "or" and len(q.weights) > 1:
+                if seed_theta is None:
+                    seed_theta = sum(dfs[t] for t in q.weights) >= self.SEED_MIN_POSTINGS
+                if seed_theta:
+                    queries[qid] = replace(q, theta0=self._seed_theta(q.weights, k))
+        return self._run_bins(queries, n_bins)
 
-        def verify(iterator):
-            from ..index.codec import decode_positions_row
+    @staticmethod
+    def _bins_of(first, last, bin_width: int):
+        """One row per docID bin that ``[first, last]`` overlaps."""
+        return F.explode(
+            F.sequence(
+                (first / F.lit(bin_width)).cast("int"), (last / F.lit(bin_width)).cast("int")
+            )
+        )
 
-            for pdf in iterator:
-                keep = []
-                for row in zip(pdf["query_id"], pdf["doc_id"], pdf["score"], pdf["posmap"]):
-                    keys, is_phrase, window = patterns[row[0]]
-                    lists = [decode_positions_row(bytes(row[3][t])) for t in keys]
-                    if _positions_satisfy(lists, is_phrase, window):
-                        keep.append(row[:3])
-                yield pd.DataFrame(keep, columns=["query_id", "doc_id", "score"]).astype(
-                    {"doc_id": "int64", "score": "float64"}
-                )
+    def _run_bins(self, queries: dict, n_bins: int | None = None) -> DataFrame:
+        """ONE grouped Python stage: the segment blocks of every key the
+        queries read (bucket prunes directories, term prunes row groups),
+        exploded to docID bins, one ``groupBy("bin")`` into
+        :func:`~.wand.score_bin`. Only the columns the kernel reads reach
+        the Python workers; positions only when a positional plan needs
+        them. Tombstones reach each bin through a COGROUP on the same
+        key, so each task sees only its own docID range's tombstones and
+        nothing rides in the closure or touches the driver. After an
+        action, ``self.last_blocks_decoded.value`` counts the tf/dl
+        payloads the bins decoded."""
+        from .wand import score_bin
 
-        return grouped.mapInPandas(verify, schema="query_id string, doc_id long, score double")
+        if not queries:
+            return self._empty_scored()
+        keys = sorted({t for q in queries.values() for t in q.match[1]})
+        positional = any(q.match[0] == "pos" for q in queries.values())
+        if n_bins is None:
+            n_bins = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        bw = max(1, -(-self.n_docs // n_bins))
+        cols = ["term", "first_doc", "last_doc", "docs", "tfs", "dls", "max_tf", "min_dl"]
+        segs = (
+            self._segments_of(keys)
+            .select(*cols, *(["positions"] if positional else []))
+            .withColumn("bin", self._bins_of(F.col("first_doc"), F.col("last_doc"), bw))
+        )
+        blocks_acc = self.spark.sparkContext.accumulator(0)
+        self.last_blocks_decoded = blocks_acc
+        schema = "query_id string, doc_id long, score double"
+
+        def run(bin_id: int, pdf: pd.DataFrame, exclude) -> pd.DataFrame:
+            if not len(pdf):
+                return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
+            stats: dict = {}
+            out = score_bin(pdf, bin_id * bw, (bin_id + 1) * bw, queries, exclude, stats)
+            blocks_acc.add(stats.get("blocks_decoded", 0))
+            return pd.DataFrame(
+                {
+                    "query_id": np.repeat([q for q, _, _ in out], [d.size for _, d, _ in out]),
+                    "doc_id": np.concatenate([d for _, d, _ in out]),
+                    "score": np.concatenate([s for _, _, s in out]),
+                }
+            )
+
+        if self._n_tombstones > self.BROADCAST_TOMBSTONES_MAX:
+            # above the row-broadcast ceiling, cogroup the word-level
+            # BITMAP masks instead of raw tombstone rows: the shuffled
+            # side is ≤ min(16·n, universe/4) bytes per query (e.g.
+            # ~2.5 GB for 2×10⁹ deletes over 10¹⁰ docs, vs ~30 GB of
+            # rows); each task expands only its own docID range's mask
+            # words to the exclude array (index/bitmaps.py layout)
+            def run_with_masks(key, pdf, masks):
+                lo, hi = key[0] * bw, (key[0] + 1) * bw
+                excl = None
+                if len(masks):
+                    base = masks["wbin"].to_numpy(dtype=np.int64) << 6
+                    words = masks["word"].to_numpy(dtype=np.int64).astype("<i8")
+                    # little-endian uint8 view → bits in doc-offset order
+                    bits = np.unpackbits(words.view(np.uint8), bitorder="little").reshape(
+                        len(words), 64
+                    )
+                    rows, offs = np.nonzero(bits)
+                    ids = base[rows] + offs
+                    ids = ids[(ids >= lo) & (ids < hi)]
+                    excl = np.sort(ids) if len(ids) else None
+                return run(key[0], pdf, excl)
+
+            # a mask word covers docIDs [wbin·64, wbin·64+63] and can
+            # straddle two bins — replicate into each
+            masks = self._tombstone_bitmaps.select(
+                self._bins_of(F.col("wbin") * 64, F.col("wbin") * 64 + 63, bw).alias("bin"),
+                "wbin",
+                "word",
+            )
+            return (
+                segs.groupBy("bin")
+                .cogroup(masks.groupBy("bin"))
+                .applyInPandas(run_with_masks, schema=schema)
+            )
+        if self._n_tombstones:
+
+            def run_with_tombs(key, pdf, tomb):
+                excl = np.sort(tomb["doc_id"].to_numpy(dtype=np.int64)) if len(tomb) else None
+                return run(key[0], pdf, excl)
+
+            tombs = self._tombstones.withColumn("bin", (F.col("doc_id") / F.lit(bw)).cast("int"))
+            return (
+                segs.groupBy("bin")
+                .cogroup(tombs.groupBy("bin"))
+                .applyInPandas(run_with_tombs, schema=schema)
+            )
+
+        def run_live(key, pdf):
+            return run(key[0], pdf, None)
+
+        return segs.groupBy("bin").applyInPandas(run_live, schema=schema)
 
     # -- scoring -------------------------------------------------------------------
     def _term_boosts(self, node: P.Node) -> dict[str, float]:
@@ -1060,21 +1013,17 @@ class IndexReader:
 
         Pure filter plans (exact match, field predicates, all-docs) score
         binary 1.0 like the reference (src/filters.rs:363-368, 487-492);
-        any plan containing scoring terms ranks by BM25 with the filters
-        shaping the candidate set."""
+        kernel-shaped plans other than a lone term emit every match from
+        the per-bin kernel; a lone term scores its decoded postings
+        directly; any other plan containing scoring terms ranks by BM25
+        with the filters shaping the candidate set."""
         if isinstance(node, (P.ExactMatch, P.FieldEq, P.FieldRange, P.AllDocs, P.Bind, P.BboxOverlap, P.ElemWord, P.ElemWordAll)) or not self._term_boosts(node):
             return self._match_set(node).withColumn("score", F.lit(1.0))
-        # a one-query batch through the shared lowerings
-        if self._tree_shaped(node):
-            return self._tree_scan({"q": node}).select("doc_id", "score")
+        if self._kernel_shaped(node) and not isinstance(node, P.Term):
+            return self._kernel({"q": node}, None).select("doc_id", "score")
         boosts = self._term_boosts(node)
         terms = sorted(boosts)
         dfs = self.term_dfs(terms)
-        if isinstance(node, (P.Phrase, P.Proximity)) and self.has_positions:
-            spec = self._positional_spec(node, dfs)
-            if spec is None:
-                return self._empty_scored().select("doc_id", "score")
-            return self._positional_scan({"q": spec}).select("doc_id", "score")
         weights = {t: bm25_idf(self.n_docs, dfs[t]) * boosts[t] for t in terms if t in dfs}
         if not weights:
             # every scoring term is absent from the corpus (df=0): no
@@ -1086,18 +1035,20 @@ class IndexReader:
                 "score", F.lit(0.0).cast("double")
             )
         avgdls = {t: self._avgdl(t) for t in weights}
-        scored = (
-            self.postings_for(list(weights))
-            .withColumn(
-                "contrib",
-                self._contrib(
-                    self._lit_map(weights)[F.col("term")],
-                    self._lit_map(avgdls)[F.col("term")],
-                ),
-            )
-            .groupBy("doc_id")
-            .agg(self._score_sum())
+        contribs = self.postings_for(list(weights)).withColumn(
+            "contrib",
+            self._contrib(
+                self._lit_map(weights)[F.col("term")],
+                self._lit_map(avgdls)[F.col("term")],
+            ),
         )
+        if isinstance(node, P.Term):
+            # one key, tf aggregated at build: each posting is one
+            # matched doc and its contribution is the score, so the full
+            # match set needs neither the kernel's bin grouping nor an
+            # aggregate (the fold would add it to 0.0)
+            return contribs.select("doc_id", F.col("contrib").alias("score"))
+        scored = contribs.groupBy("doc_id").agg(self._score_sum())
         if self._or_of_terms(node):
             return scored
         # LEFT join from the match set (not semi): a doc can match
@@ -1111,94 +1062,72 @@ class IndexReader:
             .na.fill({"score": 0.0})
         )
 
-    def search(self, node: P.Node, k: int = 10) -> DataFrame:
+    def search(
+        self,
+        node: P.Node,
+        k: int = 10,
+        n_bins: int | None = None,
+        seed_theta: bool | None = None,
+    ) -> DataFrame:
         """Top-k → DataFrame(doc_id, score) ordered by (score desc,
-        doc_id) — TakeOrderedAndProject over :meth:`scored_matches`
-        (per-partition top-k + driver merge; the reference's incremental
-        sort/merge buffer, src/query.rs:511-553)."""
-        return (
-            self.scored_matches(node)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        doc_id). Kernel-shaped plans (term-only trees, phrase,
+        proximity) take each bin's exact top-k from the kernel; the rest
+        sort :meth:`scored_matches`. Either way Spark plans one
+        TakeOrderedAndProject (per-partition top-k + driver merge; the
+        reference's incremental sort/merge buffer, src/query.rs:511-553).
+
+        ``n_bins`` (default: the shuffle partitions) and ``seed_theta``
+        (see :meth:`_kernel`) tune the kernel; after an action
+        ``self.last_blocks_decoded.value`` reports how many blocks its
+        bins decoded."""
+        if self._kernel_shaped(node):
+            scored = self._kernel({"q": node}, k, n_bins, seed_theta).select("doc_id", "score")
+        else:
+            scored = self.scored_matches(node)
+        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+    # The planner entry point and the block-max top-k are the same
+    # lowering: every shape takes the one path :meth:`search` picks.
+    query = search
+    search_wand = search
 
     def search_many(self, queries: dict[str, P.Node], k: int = 10) -> DataFrame:
-        """A whole query set as ONE Spark action. Queries are grouped by
-        shape and each group runs through the same lowering
-        :meth:`search` uses, once for the whole group: every term-only
-        tree shares ONE :meth:`_tree_scan` (segments read by several
-        queries decode once), every top-level phrase / proximity shares
-        ONE :meth:`_positional_scan`. Remaining plans (positional inside
-        boolean trees, field predicates, exact match) run their
-        per-query :meth:`search` inside the same action.
-        Returns DataFrame(query_id, doc_id, score) with each query's
-        top-k (score desc, doc_id tiebreak), rank-identical to
-        per-query :meth:`search` — bitwise, since both run the same
-        builders."""
+        """A whole query set as ONE Spark action. Every kernel-shaped
+        query (term-only tree, phrase, proximity) shares ONE kernel stage
+        (segments read by several queries decode once per bin), and a
+        window top-k per query keeps k of its ≤ n_bins·k bin survivors.
+        Remaining plans (positional inside boolean trees, field
+        predicates, exact match) run their per-query :meth:`search`
+        inside the same action. Returns DataFrame(query_id, doc_id,
+        score) with each query's top-k (score desc, doc_id tiebreak),
+        rank-identical to per-query :meth:`search` — bitwise, since both
+        run the same kernel."""
         from pyspark.sql.window import Window
 
         # ONE stats job for the union of all queries' scoring terms
-        dfs = self.term_dfs(
-            sorted({t for node in queries.values() for t in self._term_boosts(node)})
-        )
-        trees: dict[str, P.Node] = {}
-        positional: dict[str, tuple] = {}
-        parts: list[DataFrame] = []
-        for qid, node in queries.items():
-            if isinstance(node, (P.Phrase, P.Proximity)) and self.has_positions:
-                spec = self._positional_spec(node, dfs)
-                if spec is not None:
-                    positional[qid] = spec
-            elif self._tree_shaped(node):
-                trees[qid] = node
-            else:
-                parts.append(
-                    self.search(node, k=k)
-                    .withColumn("query_id", F.lit(qid))
-                    .select("query_id", "doc_id", "score")
-                )
-        scored_sets = ([self._tree_scan(trees)] if trees else []) + (
-            [self._positional_scan(positional)] if positional else []
-        )
-        if scored_sets:
-            scored = scored_sets[0]
-            for s in scored_sets[1:]:
-                scored = scored.unionByName(s)
-            # exact per-query top-k in TWO stages so no single task ever
-            # sorts a whole query's match set: salted partial top-k
-            # (32 ways), then the final top-k over <= 32*k survivors
-            order = [F.desc("score"), F.asc("doc_id")]
-            salt = F.pmod(F.hash("doc_id"), F.lit(32))
-            w1 = Window.partitionBy("query_id", salt).orderBy(*order)
-            w2 = Window.partitionBy("query_id").orderBy(*order)
-            topk = (
-                scored.withColumn("_rn", F.row_number().over(w1))
+        self.term_dfs(sorted({t for node in queries.values() for t in self._term_boosts(node)}))
+        batch = {qid: node for qid, node in queries.items() if self._kernel_shaped(node)}
+        parts = [
+            self.search(node, k=k).withColumn("query_id", F.lit(qid)).select("query_id", "doc_id", "score")
+            for qid, node in queries.items()
+            if qid not in batch
+        ]
+        if batch:
+            w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+            parts.append(
+                self._kernel(batch, k)
+                .withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") <= k)
-                .withColumn("_rn2", F.row_number().over(w2))
-                .filter(F.col("_rn2") <= k)
+                .select("query_id", "doc_id", "score")
             )
-            parts.append(topk.select("query_id", "doc_id", "score"))
         if not parts:
             return self._empty_scored()
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        return out.select("query_id", "doc_id", "score")
+        return out
 
-    def query(self, node: P.Node, k: int = 10) -> DataFrame:
-        """Planner entry point: flat scored Or/And of terms take the
-        block-max WAND path over compressed segments (bucket-pruned scan,
-        skip-heavy); everything else (positional, boolean trees, field
-        predicates, binary-scored plans) takes the exhaustive DataFrame
-        path. Both are rank-identical by construction."""
-        flat_scored = isinstance(node, (P.Or, P.And)) and all(
-            isinstance(c, P.Term) for c in getattr(node, "children", ())
-        )
-        if flat_scored:
-            return self.search_wand(node, k)
-        return self.search(node, k)
-
-    # -- block-max WAND over compressed segments --------------------------------
+    # -- global-θ seed for a flat OR ----------------------------------------------
     def _seed_theta(self, weights: dict[str, float], k: int, n_blocks: int = 8) -> float:
         """Global-θ seed: decode the ``n_blocks`` highest-upper-bound
         blocks and take the kth-largest per-doc partial score. Each
@@ -1242,187 +1171,3 @@ class IndexReader:
         # (~1e-15) so θ₀ stays a strict lower bound even though this sum
         # order differs from the engine's canonical ascending-term order
         return kth * (1.0 - 1e-9)
-
-    def search_wand(
-        self,
-        node: P.Node,
-        k: int = 10,
-        n_bins: int | None = None,
-        seed_theta: bool | None = None,
-    ) -> DataFrame:
-        """Top-k via distributed block-max WAND. Supports flat Or/And of
-        Terms (the scored-retrieval hot path); other plans fall back to
-        :meth:`search`. Rank-identical to the exhaustive path by
-        construction (exact per-bin top-k + global merge).
-        ``seed_theta``: None = adaptive (the postings-count cost gate),
-        True = force the global-θ first pass (OR mode), False = off;
-        after
-        an action, ``self.last_blocks_decoded.value`` reports how many
-        blocks the bins actually decoded."""
-        from .wand import wand_bin
-
-        flat_or = isinstance(node, P.Or) and all(isinstance(c, P.Term) for c in node.children)
-        flat_and = isinstance(node, P.And) and all(isinstance(c, P.Term) for c in node.children)
-        if not (flat_or or flat_and):
-            return self.search(node, k)
-        mode = "and" if flat_and else "or"
-        boosts = self._term_boosts(node)
-        terms = sorted(boosts)
-        dfs = self.term_dfs(terms)
-        weights = {t: bm25_idf(self.n_docs, dfs[t]) * boosts[t] for t in terms if t in dfs}
-        if not weights or (mode == "and" and len(weights) < len(terms)):
-            return self.spark.createDataFrame([], "doc_id long, score double")
-
-        if n_bins is None:
-            n_bins = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        bin_width = max(1, -(-self.n_docs // n_bins))
-
-        # partition-pruned scan: bucket prunes directories, term prunes
-        # row groups via dictionary/min-max. Only the columns the bin
-        # kernel reads are shipped to the Python workers (positions, the
-        # largest payload, never leaves the scan).
-        segs = (
-            self._segments_of(weights)
-            .select(
-                "term", "first_doc", "last_doc", "docs", "tfs", "dls", "max_tf", "min_dl"
-            )
-            .withColumn(
-                "bin",
-                F.explode(
-                    F.sequence(
-                        (F.col("first_doc") / F.lit(bin_width)).cast("int"),
-                        (F.col("last_doc") / F.lit(bin_width)).cast("int"),
-                    )
-                ),
-            )
-        )
-        w_map = dict(weights)
-        avg_dls = {t: self._avgdl(t) for t in weights}
-        kk = k
-        bw = bin_width
-        # global-θ seed (OR mode only: in AND mode a single-term partial
-        # score is NOT a lower bound of any qualifying doc's score, so
-        # seeding could wrongly prune) — every bin starts with skipping
-        # already engaged instead of θ=0. Multi-term only: with ONE term
-        # each bin's heap fills immediately and block UBs already bind,
-        # so the seed job can never pay for its own driver round-trip
-        # (measured: +28% on q_term_head_wand in round 2). Cost-gated on
-        # the EXACT total postings count (dfs are already collected):
-        # the seed job is a fixed extra driver round-trip, and the most
-        # it can save is the exhaustive decode of Σdf postings — below
-        # ~256k postings (~2k blocks, tens of ms of numpy decode) the
-        # round-trip always costs more than the skip saves; above it the
-        # saving grows with list length while the seed stays O(1).
-        # Rank-identity is unaffected either way (θ only prunes).
-        # ``seed_theta``: None = adaptive (the cost gate), True = force
-        # on (tests pin the seeded behavior), False = off.
-        if seed_theta is None:
-            seed_theta = sum(dfs[t] for t in weights) >= self.SEED_MIN_POSTINGS
-        theta0 = (
-            self._seed_theta(w_map, k)
-            if (mode == "or" and seed_theta and len(w_map) > 1)
-            else 0.0
-        )
-        blocks_acc = self.spark.sparkContext.accumulator(0)
-        self.last_blocks_decoded = blocks_acc  # .value valid after an action
-
-        def _run_bin(bin_id: int, pdf: pd.DataFrame, exclude) -> pd.DataFrame:
-            lo, hi = bin_id * bw, (bin_id + 1) * bw
-            per_term: dict[str, tuple[float, list[dict]]] = {}
-            for row in pdf.itertuples(index=False):
-                d = row._asdict() if hasattr(row, "_asdict") else dict(row)
-                per_term.setdefault(d["term"], (w_map[d["term"]], []))[1].append(d)
-            for t in w_map:
-                per_term.setdefault(t, (w_map[t], []))
-            stats: dict = {}
-            top = wand_bin(
-                per_term, lo, hi, kk, avg_dls, BM25_K1, BM25_B,
-                mode=mode, theta0=theta0, exclude=exclude, stats=stats,
-            )
-            blocks_acc.add(stats.get("blocks_decoded", 0))
-            return pd.DataFrame(
-                {
-                    "doc_id": pd.Series([d for d, _ in top], dtype="int64"),
-                    "score": pd.Series([s for _, s in top], dtype="float64"),
-                }
-            )
-
-        def run_bin(key, pdf):
-            return _run_bin(key[0], pdf, None)
-
-        def run_bin_with_tombs(key, pdf, tomb):
-            import numpy as np
-
-            excl = (
-                np.sort(tomb["doc_id"].to_numpy(dtype="int64")) if len(tomb) else None
-            )
-            return _run_bin(key[0], pdf, excl)
-
-        out_schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("score", T.DoubleType(), False),
-            ]
-        )
-        if self._n_tombstones > self.BROADCAST_TOMBSTONES_MAX:
-            # above the row-broadcast ceiling, cogroup the word-level
-            # BITMAP masks instead of raw tombstone rows: the shuffled
-            # side is ≤ min(16·n, universe/4) bytes per query (e.g.
-            # ~2.5 GB for 2×10⁹ deletes over 10¹⁰ docs, vs ~30 GB of
-            # rows); each task expands only its own docID range's mask
-            # words to the exclude array (index/bitmaps.py layout)
-            def run_bin_with_masks(key, pdf, masks):
-                import numpy as np
-
-                lo, hi = key[0] * bw, (key[0] + 1) * bw
-                excl = None
-                if len(masks):
-                    base = masks["wbin"].to_numpy(dtype=np.int64) << 6
-                    words = (
-                        masks["word"].to_numpy(dtype=np.int64).astype("<i8")
-                    )
-                    # little-endian uint8 view → bits in doc-offset order
-                    bits = np.unpackbits(
-                        words.view(np.uint8), bitorder="little"
-                    ).reshape(len(words), 64)
-                    rows, offs = np.nonzero(bits)
-                    ids = base[rows] + offs
-                    ids = ids[(ids >= lo) & (ids < hi)]
-                    excl = np.sort(ids) if len(ids) else None
-                return _run_bin(key[0], pdf, excl)
-
-            # a mask word covers docIDs [wbin·64, wbin·64+63] and can
-            # straddle two WAND bins — replicate into each (same
-            # sequence-explode shape as the segment→bin mapping above)
-            masks = self._tombstone_bitmaps.select(
-                F.explode(
-                    F.sequence(
-                        ((F.col("wbin") * 64) / F.lit(bin_width)).cast("int"),
-                        ((F.col("wbin") * 64 + 63) / F.lit(bin_width)).cast(
-                            "int"
-                        ),
-                    )
-                ).alias("bin"),
-                "wbin",
-                "word",
-            )
-            candidates = (
-                segs.groupBy("bin")
-                .cogroup(masks.groupBy("bin"))
-                .applyInPandas(run_bin_with_masks, schema=out_schema)
-            )
-        elif self._n_tombstones:
-            # tombstones reach each bin through a COGROUP on the same bin
-            # key — each task sees only its own docID range's tombstones,
-            # nothing rides in the closure, nothing touches the driver
-            tombs = self._tombstones.withColumn(
-                "bin", (F.col("doc_id") / F.lit(bin_width)).cast("int")
-            )
-            candidates = (
-                segs.groupBy("bin")
-                .cogroup(tombs.groupBy("bin"))
-                .applyInPandas(run_bin_with_tombs, schema=out_schema)
-            )
-        else:
-            candidates = segs.groupBy("bin").applyInPandas(run_bin, schema=out_schema)
-        return candidates.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

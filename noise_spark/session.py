@@ -37,6 +37,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("NOISE_SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
+        # PySpark 4 records the Python call site of every DataFrame and
+        # Column call (about 5 extra py4j round trips each) so analysis
+        # errors can name the user's line; every query plan built on
+        # the driver pays that on each call (README: Requirements)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Sandbox-scale default: the test corpora are a few hundred MB, so
         # the 128MB default packs everything into a handful of input
         # splits and caps scan/tokenize parallelism at ~4 tasks. 4MB keeps
@@ -89,17 +94,13 @@ def _warm_session(spark: SparkSession) -> None:
             .save()
         )
         # the scored-aggregation expression shape (literal map lookup +
-        # collect_list/array_sort + HOF fold + bit_or): compiles the
-        # codegen classes the first real query would otherwise pay for
+        # collect_list/array_sort + HOF fold): compiles the codegen
+        # classes the first real query would otherwise pay for
         from pyspark.sql import functions as F
 
         (
             spark.range(0, p * 4, 1, p)
-            .select(
-                "id",
-                F.create_map(F.lit("t"), F.lit(1.0))[F.lit("t")].alias("w"),
-                F.lit(1).cast("long").alias("bit"),
-            )
+            .select("id", F.create_map(F.lit("t"), F.lit(1.0))[F.lit("t")].alias("w"))
             .groupBy("id")
             .agg(
                 F.aggregate(
@@ -111,9 +112,7 @@ def _warm_session(spark: SparkSession) -> None:
                     F.lit(0.0),
                     lambda acc, x: acc + x["contrib"],
                 ).alias("s"),
-                F.bit_or("bit").alias("m"),
             )
-            .filter(F.col("m").bitwiseAND(F.lit(1)) != 0)
             .write.format("noop")
             .mode("overwrite")
             .save()

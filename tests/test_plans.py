@@ -157,36 +157,41 @@ def test_tombstone_antijoin_broadcasts(spark, tmp_path):
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
 
+def _python_stages(df) -> tuple[int, int]:
+    """(grouped Python stages, MapInPandas stages) in the physical plan
+    (queryExecution().toString() repeats every node once per phase)."""
+    physical = df._jdf.queryExecution().executedPlan().toString()
+    return physical.count("FlatMapGroupsInPandas"), physical.count("MapInPandas")
+
+
 def test_search_many_shares_one_segment_scan(plan_reader):
-    """The batched flat-query set must decode segments in ONE shared
-    scan (r4 VERDICT item 6): a 3-query batch plans exactly one
-    mapInPandas postings decode + one broadcast weights join — not one
-    scan per query."""
+    """The batched term-only query set must decode segments in ONE
+    shared kernel stage (r4 VERDICT item 6): a 4-query batch of flat
+    and NOT trees plans exactly one grouped Python stage over the
+    binned segment scan, no per-query scan, no MapInPandas decode and
+    no lookup-table join — the per-query parameters ride in the
+    kernel's closure."""
     from noise_spark.query import plan as P
 
     qs = {
         "a": P.Or((P.Term("w00001"), P.Term("w00002"))),
         "b": P.And((P.Term("w00001"), P.Term("w00003"))),
         "c": P.Or((P.Term("w00002"),)),
-        # flat-armed NOT rides the same scan (weightless neg markers)
+        # flat-armed NOT rides the same stage (weightless neg markers)
         "d": P.Not(P.Term("w00001"), P.Term("w00002")),
     }
     df = plan_reader.search_many(qs, k=5)
-    # count in the PHYSICAL plan only (queryExecution().toString()
-    # repeats every node once per plan phase)
     physical = df._jdf.queryExecution().executedPlan().toString()
-    assert physical.count("MapInPandas") == 1, physical[:2000]
-    # r6: the per-query weights fan out via a literal map + explode —
-    # no lookup-table join of ANY kind remains in the batched plan
+    assert _python_stages(df) == (1, 0), physical[:2000]
     assert "Generate explode" in physical
     assert "BroadcastHashJoin" not in physical
 
 
 def test_search_many_positional_shares_one_scan(plan_reader):
-    """A batch with positional queries plans a CONSTANT number of
-    decodes regardless of Q: one flat postings decode + one positional
-    decode + one Arrow verify = exactly 3 MapInPandas for a mixed
-    4-query batch (not one scan per query)."""
+    """A batch mixing term-only and positional queries plans a CONSTANT
+    number of Python stages regardless of Q: the flat trees and the
+    phrase/proximity patterns share ONE grouped kernel stage (positions
+    ride the same scan) — no decode or verify MapInPandas."""
     from noise_spark.query import plan as P
 
     qs = {
@@ -197,9 +202,37 @@ def test_search_many_positional_shares_one_scan(plan_reader):
     }
     df = plan_reader.search_many(qs, k=5)
     physical = df._jdf.queryExecution().executedPlan().toString()
-    assert physical.count("MapInPandas") == 3, physical[:2000]
-    # r6: literal-map fan-out on both shared scans — join-free
+    assert _python_stages(df) == (1, 0), physical[:2000]
     assert "BroadcastHashJoin" not in physical
+
+
+def test_single_topk_is_one_grouped_python_stage(plan_reader):
+    """Every single top-k of a term-only or positional plan, through
+    search, query or the query language, is one grouped Python stage
+    (the per-bin kernel) under one TakeOrderedAndProject: no
+    MapInPandas decode, no second verify stage."""
+    from noise_spark.query import plan as P
+    from noise_spark.query.parser import run_query
+
+    shapes = {
+        "term": P.Term("w00001"),
+        "or": P.Or((P.Term("w00001"), P.Term("w00002"))),
+        "and": P.And((P.Term("w00001"), P.Term("w00002"))),
+        "not": P.Not(P.Term("w00001"), P.Term("w00002")),
+        "tree": P.And((P.Or((P.Term("w00001"), P.Term("w00002"))), P.Term("w00003"))),
+        "phrase": P.Phrase(("w00001", "w00002")),
+        "prox": P.Proximity(("w00001", "w00002"), window=5),
+    }
+    for name, node in shapes.items():
+        for df in (plan_reader.search(node, k=5), plan_reader.query(node, k=5)):
+            physical = df._jdf.queryExecution().executedPlan().toString()
+            assert _python_stages(df) == (1, 0), (name, physical[:2000])
+            assert physical.count("TakeOrderedAndProject") == 1, name
+    df = run_query(
+        plan_reader,
+        'find {text: ~= "w00001 w00002"} order score() desc return {id: ._id, s: score()} limit 10',
+    )
+    assert _python_stages(df) == (1, 0)
 
 
 def test_whole_doc_return_projects_all_doc_columns(plan_reader):

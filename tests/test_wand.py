@@ -2,12 +2,23 @@
 to the oracle) — SURVEY.md §7 step 8."""
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from noise_spark.index import codec
 from noise_spark.query import IndexReader
 from noise_spark.query import plan as P
-from noise_spark.query.wand import wand_bin
+from noise_spark.query.wand import BinQuery, score_bin
+
+
+def _kernel_topk(terms, lo, hi, k, avg_dls, theta0=0.0, stats=None):
+    """The kernel's flat-OR top-k over hand-built blocks: ``terms`` maps
+    term → (weight, block rows)."""
+    pdf = pd.DataFrame([dict(r, term=t) for t, (_, rows) in terms.items() for r in rows])
+    weights = {t: w for t, (w, _) in terms.items()}
+    q = BinQuery(("or", sorted(weights)), weights, avg_dls, k, theta0)
+    ((_, docs, scores),) = score_bin(pdf, lo, hi, {"q": q}, stats=stats)
+    return [(int(d), float(s)) for d, s in zip(docs, scores)]
 
 
 @pytest.fixture(scope="module")
@@ -29,16 +40,17 @@ WAND_QUERIES = {
 
 @pytest.mark.parametrize("name", sorted(WAND_QUERIES))
 @pytest.mark.parametrize("n_bins", [1, 7])
-def test_wand_rank_identical_to_exhaustive(name, n_bins, reader):
+def test_wand_rank_identical_to_exhaustive(name, n_bins, reader, small_oracle):
+    """The block-max top-k at one and at several docID bins equals the
+    exhaustive pure-Python oracle bit for bit."""
     node = WAND_QUERIES[name]
-    exhaustive = [(r["doc_id"], r["score"]) for r in reader.search(node, k=10).collect()]
-    wand = [(r["doc_id"], r["score"]) for r in reader.search_wand(node, k=10, n_bins=n_bins).collect()]
-    assert wand == exhaustive, f"{name} (bins={n_bins})"
+    wand = [(r["doc_id"], r["score"]) for r in reader.search(node, k=10, n_bins=n_bins).collect()]
+    assert wand == small_oracle.search(node, k=10), f"{name} (bins={n_bins})"
 
 
 def test_wand_bin_unit_pruning():
-    """Unit-level: wand_bin on hand-built blocks matches brute force and
-    never misses a tie at the threshold."""
+    """Unit-level: the kernel on hand-built blocks matches brute force
+    and never misses a tie at the threshold."""
     rng = np.random.default_rng(7)
     n_docs = 2000
     avg_dl, k1, b = 100.0, 1.2, 0.75
@@ -78,7 +90,7 @@ def test_wand_bin_unit_pruning():
             truth[d] = truth.get(d, 0.0) + x
 
     want = sorted(truth.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
-    got = wand_bin(terms, 0, n_docs, 10, dict.fromkeys(terms, avg_dl), k1, b, mode="or")
+    got = _kernel_topk(terms, 0, n_docs, 10, dict.fromkeys(terms, avg_dl))
     assert [d for d, _ in got] == [d for d, _ in want]
     for (gd, gs), (wd, ws) in zip(got, want):
         assert gs == pytest.approx(ws, rel=1e-12)
@@ -112,7 +124,7 @@ def test_wand_bin_theta0_exact():
     the result; a θ₀ above it may drop docs — never produced by
     _seed_theta, but assert the lower-bound contract boundary."""
     rng = np.random.default_rng(3)
-    avg_dl, k1, b = 80.0, 1.2, 0.75
+    avg_dl = 80.0
     ids = np.sort(rng.choice(1000, size=400, replace=False))
     tfs = rng.integers(1, 6, size=ids.size)
     dls = rng.integers(40, 160, size=ids.size)
@@ -132,13 +144,10 @@ def test_wand_bin_theta0_exact():
         )
     terms = {"t": (1.5, rows)}
     avg_dls = {"t": avg_dl}
-    base = wand_bin(terms, 0, 1000, 10, avg_dls, k1, b, mode="or")
+    base = _kernel_topk(terms, 0, 1000, 10, avg_dls)
     kth = base[-1][1]
     stats: dict = {}
-    seeded = wand_bin(
-        terms, 0, 1000, 10, avg_dls, k1, b, mode="or",
-        theta0=kth * (1.0 - 1e-9), stats=stats,
-    )
+    seeded = _kernel_topk(terms, 0, 1000, 10, avg_dls, theta0=kth * (1.0 - 1e-9), stats=stats)
     assert seeded == base
     assert stats["blocks_decoded"] >= 1
 
@@ -196,12 +205,15 @@ def test_search_many_matches_individual(reader, small_oracle):
         assert got == small_oracle.search(node, k=10), qid
 
 
-def test_query_planner_routes(reader):
-    """query() must route flat scored plans through WAND and the rest
-    through the exhaustive path, rank-identically."""
+def test_query_planner_routes(reader, small_oracle):
+    """query() routes a flat OR and a NOT tree through the kernel and a
+    phrase inside a boolean tree through the match-set lowering; each
+    top-k equals the oracle's bit for bit."""
     flat = P.Or((P.Term("w00050"), P.Term("w01500")))
     mixed = P.Not(P.Term("w00050"), P.Term("w00002"))
-    for node in (flat, mixed):
-        a = [(r["doc_id"], r["score"]) for r in reader.query(node, k=10).collect()]
-        b = [(r["doc_id"], r["score"]) for r in reader.search(node, k=10).collect()]
-        assert a == b
+    nested = P.And((P.Phrase(("quick", "brown")), P.Term("fox")))
+    assert reader._kernel_shaped(flat) and reader._kernel_shaped(mixed)
+    assert not reader._kernel_shaped(nested)
+    for node in (flat, mixed, nested):
+        got = [(r["doc_id"], r["score"]) for r in reader.query(node, k=10).collect()]
+        assert got == small_oracle.search(node, k=10), node
