@@ -247,7 +247,7 @@ def ft_or_topk_wand(spark, sf_dir):
     # exercised through the block-max WAND path over compressed segments
     r = doc_index(spark, sf_dir)
     return _topk_df(
-        r.search_wand(P.Or((P.Term("dup"), P.Term("slow"), P.Term("merge"))), k=10)
+        r.search(P.Or((P.Term("dup"), P.Term("slow"), P.Term("merge"))), k=10)
     )
 
 

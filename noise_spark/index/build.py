@@ -630,8 +630,14 @@ def build_index(
 
         t0 = time.time()
         segs = spark.read.parquet(cat.stage_path(sp("segments")))
-        term_stats = segs.groupBy("term").agg(
-            F.sum("n_docs").alias("df"), F.sum("tf_sum").alias("cf")
+        # sorted within each partition: the aggregate emits rows in
+        # shuffle-fetch order, so without the sort two builds of one
+        # corpus write different bytes; sorted row groups also let the
+        # reader's term filter prune by min/max
+        term_stats = (
+            segs.groupBy("term")
+            .agg(F.sum("n_docs").alias("df"), F.sum("tf_sum").alias("cf"))
+            .sortWithinPartitions("term")
         )
         # Single-consumption invariant: the observed per-field cf sums
         # are exact only while `term_stats` is consumed by exactly ONE

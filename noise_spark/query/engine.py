@@ -6,8 +6,9 @@ operations —
 - term postings scan  → parquet read filtered by ``term`` (predicate
   pushdown + dictionary/min-max pruning; segments additionally prune by
   the deterministic term bucket partition)
-- match sets          → AND = semi joins, OR = union, NOT = left_anti
-  join (filter-only plans and trees mixing terms with field predicates)
+- match sets          → a term-only tree is the kernel's weightless
+  tree plan (below); trees with other arms (field predicates, phrases)
+  join their arms: AND = semi joins, OR = union, NOT = left_anti join
 - scored queries      → ONE plan shape for every term-only tree and
   top-level phrase / proximity, single (:meth:`IndexReader.search`) or
   batched (:meth:`IndexReader.search_many`): the bucket-pruned segment
@@ -19,15 +20,13 @@ operations —
   The kernel sums ``w · tf_norm`` from :func:`noise_spark.scoring.bm25_tf_norm`
   in ASCENDING TERM ORDER, so scores are bitwise-reproducible across
   partitionings and bitwise-comparable to the pure-Python oracle
-- other scored plans  → BM25 contributions as JVM-side column
-  expressions built by the same ``bm25_tf_norm``, summed in ascending
-  term order via ``aggregate(array_sort(collect_list(...)))``, left-
-  joined to the match set
+- other scored plans  → the same kernel scores every doc holding a
+  scoring term (one flat OR of them, every match), left-joined from the
+  match set; a lone term scores its decoded postings on Columns
 """
 
 from __future__ import annotations
 
-from dataclasses import replace
 from functools import cached_property
 
 import numpy as np
@@ -36,7 +35,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import BM25_B, BM25_K1
 from ..index.catalog import IndexCatalog, stage_name, visible_generations
 from ..scoring import bm25_idf, bm25_tf_norm
 from . import plan as P
@@ -411,11 +409,6 @@ class IndexReader:
     # 8 GB and every executor holds the built relation)
     BROADCAST_BITMAP_MAX_WORDS = 128_000_000
 
-    # below this many total postings across a WAND query's terms, the
-    # global-θ seed job (a driver round-trip) costs more than the block
-    # skipping it enables can save (see search_wand)
-    SEED_MIN_POSTINGS = 262_144
-
     def _minus_tombstones(self, df: DataFrame) -> DataFrame:
         if not self._n_tombstones:
             return df
@@ -536,27 +529,18 @@ class IndexReader:
         """DataFrame[doc_id] of matching documents."""
         if isinstance(node, P.Term):
             return self.postings_for([self._key(node.term, node.field)]).select("doc_id")
+        if self._tree_shaped(node):
+            # a term-only And/Or/Not: the kernel's tree plan, weightless
+            from .wand import BinQuery
+
+            return self._run_bins({"q": BinQuery(self._tree_match(node), {}, {}, None)}).select("doc_id")
         if isinstance(node, P.Or):
-            kids = [c for c in node.children]
-            if all(isinstance(c, P.Term) for c in kids):
-                terms = [self._key(c.term, c.field) for c in kids]
-                return self.postings_for(terms).select("doc_id").distinct()
-            out = self._match_set(kids[0])
-            for c in kids[1:]:
+            out = self._match_set(node.children[0])
+            for c in node.children[1:]:
                 out = out.union(self._match_set(c))
             return out.distinct()
         if isinstance(node, P.And):
             kids = list(node.children)
-            if all(isinstance(c, P.Term) for c in kids):
-                terms = sorted({self._key(c.term, c.field) for c in kids})
-                # one scan + count == n  (re-expresses leapfrog intersection)
-                return (
-                    self.postings_for(terms)
-                    .groupBy("doc_id")
-                    .agg(F.count("*").alias("n"))
-                    .filter(F.col("n") == len(terms))
-                    .select("doc_id")
-                )
             out = self._match_set(kids[0])
             for c in kids[1:]:
                 out = out.join(self._match_set(c), "doc_id", "left_semi")
@@ -763,6 +747,12 @@ class IndexReader:
             return exprs[0] if len(exprs) == 1 else ("or" if is_or else "and", exprs)
         return ("not", self._tree_bits(node.positive, qbits), self._tree_bits(node.negative, qbits))
 
+    def _tree_match(self, node: P.Node) -> tuple:
+        """The kernel's ``("tree", keys, expr)`` plan of a term-only tree
+        (bit i ↔ the i-th sorted key)."""
+        keys = sorted(self._tree_keys(node))
+        return ("tree", keys, self._tree_bits(node, {t: 1 << i for i, t in enumerate(keys)}))
+
     @staticmethod
     def _or_of_terms(node: P.Node) -> bool:
         """Only Or and Term nodes: every posting of its keys matches."""
@@ -771,32 +761,6 @@ class IndexReader:
         return isinstance(node, P.Or) and all(
             IndexReader._or_of_terms(c) for c in node.children
         )
-
-    @staticmethod
-    def _lit_map(d: dict):
-        """map<string, T> of driver-side literals — replaces a
-        createDataFrame + broadcast-join of a per-query lookup table
-        with a plain expression (one job and one exchange fewer per
-        query; the values are the identical Python doubles/longs, so
-        downstream float arithmetic is bitwise unchanged)."""
-        return F.create_map(*[F.lit(x) for kv in d.items() for x in kv])
-
-    def _contrib(self, w, avgdl):
-        """Per-posting BM25 contribution over the scan's ``tf``/``dl``:
-        :func:`bm25_tf_norm` evaluated on Columns (Spark only commutes
-        the ``*``/``+`` operands, exact in IEEE), times the weight."""
-        return w * bm25_tf_norm(F.col("tf"), F.col("dl"), avgdl, BM25_K1, BM25_B)
-
-    @staticmethod
-    def _score_sum():
-        """A group's ``contrib`` rows summed in ascending term order, so
-        the float score is bitwise independent of partitioning (and
-        equal to the oracle's)."""
-        return F.aggregate(
-            F.array_sort(F.collect_list(F.struct("term", "contrib"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["contrib"],
-        ).alias("score")
 
     def _empty_scored(self) -> DataFrame:
         return self.spark.createDataFrame([], "query_id string, doc_id long, score double")
@@ -812,6 +776,10 @@ class IndexReader:
             return self.has_positions
         return self._tree_shaped(node)
 
+    def _weights(self, boosts: dict[str, float], dfs: dict[str, int]) -> dict[str, float]:
+        """Scoring key → idf · boost, for the keys present in the corpus."""
+        return {t: bm25_idf(self.n_docs, dfs[t]) * boosts[t] for t in sorted(boosts) if t in dfs}
+
     def _bin_query(self, node: P.Node, dfs: dict[str, int], k: int | None):
         """The kernel's :class:`~.wand.BinQuery` of a kernel-shaped plan,
         or None when the plan can match nothing (an absent phrase or AND
@@ -819,7 +787,7 @@ class IndexReader:
         from .wand import BinQuery
 
         boosts = self._term_boosts(node)
-        weights = {t: bm25_idf(self.n_docs, dfs[t]) * boosts[t] for t in boosts if t in dfs}
+        weights = self._weights(boosts, dfs)
         if isinstance(node, (P.Phrase, P.Proximity)):
             if len(weights) < len(boosts):
                 return None
@@ -834,28 +802,13 @@ class IndexReader:
                 return None
             match = ("and", sorted(weights))
         else:
-            keys = sorted(self._tree_keys(node))
-            match = ("tree", keys, self._tree_bits(node, {t: 1 << i for i, t in enumerate(keys)}))
+            match = self._tree_match(node)
         return BinQuery(match, weights, {t: self._avgdl(t) for t in weights}, k)
 
-    def _kernel(
-        self,
-        plans: dict[str, P.Node],
-        k: int | None,
-        n_bins: int | None = None,
-        seed_theta: bool | None = None,
-    ) -> DataFrame:
+    def _kernel(self, plans: dict[str, P.Node], k: int | None, n_bins: int | None = None) -> DataFrame:
         """Scored ``(query_id, doc_id, score)`` of a batch of
         kernel-shaped plans: each plan's exact top-k of every bin, or
-        every match when ``k`` is None.
-
-        A lone flat OR of several terms may first seed a global θ₀
-        (:meth:`_seed_theta`) so every bin skips from its first block.
-        ``seed_theta``: None = adaptive, on when the terms hold at least
-        ``SEED_MIN_POSTINGS`` postings (below that the seed job's driver
-        round-trip costs more than the skipped decodes save); True =
-        force on; False = off. Rank identity is unaffected either way (θ
-        only prunes)."""
+        every match when ``k`` is None."""
         dfs = self.term_dfs(
             sorted({t for node in plans.values() for t in self._term_boosts(node)})
         )
@@ -864,13 +817,6 @@ class IndexReader:
             q = self._bin_query(node, dfs, k)
             if q is not None:
                 queries[qid] = q
-        if len(queries) == 1 and k is not None:
-            ((qid, q),) = queries.items()
-            if q.match[0] == "or" and len(q.weights) > 1:
-                if seed_theta is None:
-                    seed_theta = sum(dfs[t] for t in q.weights) >= self.SEED_MIN_POSTINGS
-                if seed_theta:
-                    queries[qid] = replace(q, theta0=self._seed_theta(q.weights, k))
         return self._run_bins(queries, n_bins)
 
     @staticmethod
@@ -1016,15 +962,17 @@ class IndexReader:
         kernel-shaped plans other than a lone term emit every match from
         the per-bin kernel; a lone term scores its decoded postings
         directly; any other plan containing scoring terms ranks by BM25
-        with the filters shaping the candidate set."""
+        with the filters shaping the candidate set: its match set
+        left-joined to one kernel plan that scores every doc holding a
+        scoring term."""
+        from .wand import BinQuery
+
         if isinstance(node, (P.ExactMatch, P.FieldEq, P.FieldRange, P.AllDocs, P.Bind, P.BboxOverlap, P.ElemWord, P.ElemWordAll)) or not self._term_boosts(node):
             return self._match_set(node).withColumn("score", F.lit(1.0))
         if self._kernel_shaped(node) and not isinstance(node, P.Term):
             return self._kernel({"q": node}, None).select("doc_id", "score")
         boosts = self._term_boosts(node)
-        terms = sorted(boosts)
-        dfs = self.term_dfs(terms)
-        weights = {t: bm25_idf(self.n_docs, dfs[t]) * boosts[t] for t in terms if t in dfs}
+        weights = self._weights(boosts, self.term_dfs(sorted(boosts)))
         if not weights:
             # every scoring term is absent from the corpus (df=0): no
             # BM25 mass anywhere, but a doc can still match through a
@@ -1035,20 +983,19 @@ class IndexReader:
                 "score", F.lit(0.0).cast("double")
             )
         avgdls = {t: self._avgdl(t) for t in weights}
-        contribs = self.postings_for(list(weights)).withColumn(
-            "contrib",
-            self._contrib(
-                self._lit_map(weights)[F.col("term")],
-                self._lit_map(avgdls)[F.col("term")],
-            ),
-        )
         if isinstance(node, P.Term):
             # one key, tf aggregated at build: each posting is one
             # matched doc and its contribution is the score, so the full
-            # match set needs neither the kernel's bin grouping nor an
-            # aggregate (the fold would add it to 0.0)
-            return contribs.select("doc_id", F.col("contrib").alias("score"))
-        scored = contribs.groupBy("doc_id").agg(self._score_sum())
+            # match set needs neither the kernel's bin grouping nor a sum
+            # (adding it to 0.0 changes nothing). The weight and avgdl
+            # are scalar literals; Spark only commutes the ``*``/``+``
+            # operands of bm25_tf_norm, which is exact in IEEE.
+            ((t, w),) = weights.items()
+            tfn = bm25_tf_norm(F.col("tf"), F.col("dl"), F.lit(avgdls[t]))
+            return self.postings_for([t]).select("doc_id", (F.lit(w) * tfn).alias("score"))
+        # every doc holding a scoring term, scored in full by the kernel
+        q = BinQuery(("or", sorted(weights)), weights, avgdls, None)
+        scored = self._run_bins({"q": q}).select("doc_id", "score")
         if self._or_of_terms(node):
             return scored
         # LEFT join from the match set (not semi): a doc can match
@@ -1062,13 +1009,7 @@ class IndexReader:
             .na.fill({"score": 0.0})
         )
 
-    def search(
-        self,
-        node: P.Node,
-        k: int = 10,
-        n_bins: int | None = None,
-        seed_theta: bool | None = None,
-    ) -> DataFrame:
+    def search(self, node: P.Node, k: int = 10, n_bins: int | None = None) -> DataFrame:
         """Top-k → DataFrame(doc_id, score) ordered by (score desc,
         doc_id). Kernel-shaped plans (term-only trees, phrase,
         proximity) take each bin's exact top-k from the kernel; the rest
@@ -1076,20 +1017,18 @@ class IndexReader:
         TakeOrderedAndProject (per-partition top-k + driver merge; the
         reference's incremental sort/merge buffer, src/query.rs:511-553).
 
-        ``n_bins`` (default: the shuffle partitions) and ``seed_theta``
-        (see :meth:`_kernel`) tune the kernel; after an action
-        ``self.last_blocks_decoded.value`` reports how many blocks its
-        bins decoded."""
+        ``n_bins`` (default: the shuffle partitions) sets the kernel's
+        docID bins; after an action ``self.last_blocks_decoded.value``
+        reports how many blocks its bins decoded."""
         if self._kernel_shaped(node):
-            scored = self._kernel({"q": node}, k, n_bins, seed_theta).select("doc_id", "score")
+            scored = self._kernel({"q": node}, k, n_bins).select("doc_id", "score")
         else:
             scored = self.scored_matches(node)
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
-    # The planner entry point and the block-max top-k are the same
-    # lowering: every shape takes the one path :meth:`search` picks.
+    # The planner entry point: every shape takes the one path
+    # :meth:`search` picks.
     query = search
-    search_wand = search
 
     def search_many(self, queries: dict[str, P.Node], k: int = 10) -> DataFrame:
         """A whole query set as ONE Spark action. Every kernel-shaped
@@ -1126,48 +1065,3 @@ class IndexReader:
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
-
-    # -- global-θ seed for a flat OR ----------------------------------------------
-    def _seed_theta(self, weights: dict[str, float], k: int, n_blocks: int = 8) -> float:
-        """Global-θ seed: decode the ``n_blocks`` highest-upper-bound
-        blocks and take the kth-largest per-doc partial score. Each
-        decoded contribution is EXACT for its term, so per-doc sums are
-        lower bounds of true scores, and the kth largest of k lower
-        bounds is a lower bound of the kth-best overall score — seeding
-        θ with it can never skip a true top-k doc.
-
-        Runs as ONE small distributed job: a bucket+term-pruned block
-        scan, TakeOrdered(n_blocks) on the stored block UBs, executor-
-        side decode of those blocks through the engine's one decoder,
-        tombstone removal by ANTI-JOIN (tombstones are never collected
-        to the driver), per-doc sum, top-k. Only k scalar rows reach the
-        driver."""
-        wmap = self._lit_map({t: float(w) for t, w in weights.items()})
-        avgdl_map = self._lit_map({t: self._avgdl(t) for t in weights})
-        ub = wmap[F.col("term")] * bm25_tf_norm(
-            F.col("max_tf"), F.col("min_dl"), avgdl_map[F.col("term")], BM25_K1, BM25_B
-        )
-        top_blocks = (
-            self._segments_of(weights)
-            .orderBy(ub.desc(), "term", "first_doc")  # deterministic under ties
-            .limit(n_blocks)
-        )
-        contribs = self._minus_tombstones(
-            self._decode_blocks(top_blocks)
-        ).withColumn(
-            "contrib", self._contrib(wmap[F.col("term")], avgdl_map[F.col("term")])
-        )
-        rows = (
-            contribs.groupBy("doc_id")
-            .agg(F.sum("contrib").alias("s"))
-            .orderBy(F.desc("s"), F.asc("doc_id"))
-            .limit(k)
-            .collect()
-        )
-        if len(rows) < k:
-            return 0.0
-        kth = float(rows[-1]["s"])
-        # nudge down by a relative margin far above float reorder error
-        # (~1e-15) so θ₀ stays a strict lower bound even though this sum
-        # order differs from the engine's canonical ascending-term order
-        return kth * (1.0 - 1e-9)

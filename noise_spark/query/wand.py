@@ -14,13 +14,15 @@ Inside a bin each query is evaluated on sorted docID arrays:
 - flat OR with k: block-level MaxScore. A block's bound is its own
   upper bound plus, per other key, the largest upper bound of that
   key's blocks overlapping it. Blocks decode in descending bound order
-  while their bound reaches θ, the kth-best partial score so far (or a
-  seeded global θ₀); a skipped block cannot hold a doc scoring ≥ θ.
+  while their bound reaches θ, the bin's kth-best partial score so far
+  (0.0 until k docs are scored); a skipped block cannot hold a doc
+  scoring ≥ θ.
 - flat AND: a block is read only when every other key has a block
   overlapping it, and the docID arrays intersect before any tf/dl
   payload is decoded.
-- term-only trees: per-key presence bits (bit i = the i-th sorted key,
-  the bit assignment of the Spark mask lowering) and vector bit tests.
+- term-only trees: per-key presence bits (bit i = the i-th sorted key)
+  and vector bit tests — also the unscored match set of every term-only
+  And/Or/Not (``IndexReader._match_set``).
 - phrase / proximity: docs holding every term are verified with
   :func:`positions_satisfy`.
 
@@ -101,15 +103,12 @@ class BinQuery:
     ``expr`` as built by ``IndexReader._tree_bits``) or ``("pos", keys,
     is_phrase, window)`` (keys in query order). ``weights``: scoring key
     → idf·boost; a key without one is a weightless marker. ``avg_dls``:
-    scoring key → the avgdl of its field. ``k`` None emits every match.
-    ``theta0``: a proven lower bound of the global kth-best score (a
-    flat OR only), 0.0 for none."""
+    scoring key → the avgdl of its field. ``k`` None emits every match."""
 
     match: tuple
     weights: dict
     avg_dls: dict
     k: int | None
-    theta0: float = 0.0
 
 
 class _Blocks:
@@ -319,7 +318,7 @@ def _flat_or(blocks: _Blocks, q: BinQuery):
     row_ids, row_keys, bound = _bounds(blocks, q, rows)
     # descending bound; ties by key then docID range (deterministic)
     order = np.lexsort((blocks.first[row_ids], row_keys.astype(str), -bound))
-    theta = q.theta0
+    theta = 0.0
     picked: dict[str, list] = {}
     docs, scores = _NO_DOCS, _NO_SCORES
     i, step = 0, 1

@@ -1,8 +1,9 @@
 """BM25 math (k1=1.2, b=0.75) — the single definition. The oracle calls
-it on scalars, the WAND kernel on numpy arrays, and the Spark engine on
-Columns (``IndexReader._contrib`` and the WAND seed's block bound), so
-there is no second copy of the formula. The exact floating-point
-expression SHAPE matters: every caller computes
+it on scalars, the per-bin kernel (``query/wand.py``) on numpy arrays,
+and the Spark engine on Columns in one place (a lone term's full scored
+match set, ``IndexReader.scored_matches``), so there is no second copy
+of the formula. The exact floating-point expression SHAPE matters:
+every caller computes
 ``w * ((tf*(k1+1)) / (tf + k1*((1-b) + b*(dl/avgdl))))`` with this
 associativity (on Columns Spark only swaps the operands of ``*`` and
 ``+``, which is exact in IEEE) and sums contributions in ascending term

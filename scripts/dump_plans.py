@@ -4,8 +4,11 @@ batched, to ``plans/current/`` — plan artifacts generated from the code.
 Builds the seeded benchmark corpus (``perfbench/inputs.py``: 500 pages,
 read only) into a temporary index, then writes ``explain("formatted")``
 of ``IndexReader.query`` for each plan shape of one query-stream block,
-of ``run_query`` for the query-language phrase, and of one
-``search_many`` batch of every plan shape. Expression ids, plan ids and
+of ``run_query`` for the query-language phrase, of one
+``search_many`` batch of every plan shape, and of two shapes the
+benchmark stream does not hold: a term under a field predicate
+(``filtered``) and a phrase inside an And (``phrase_in_and``), the
+match-set lowerings scored by the kernel. Expression ids, plan ids and
 the index path are normalised, so a rerun only differs where the plan
 does.
 
@@ -50,6 +53,7 @@ def main() -> None:
 
     from noise_spark.index.build import BuildConfig, build_index
     from noise_spark.query import IndexReader
+    from noise_spark.query import plan as P
     from noise_spark.query.parser import run_query
     from noise_spark.session import get_spark
 
@@ -74,6 +78,9 @@ def main() -> None:
                 plans[shape] = reader.query(to_plan(q), k=10)
         batch = {shape: to_plan(q) for shape, q in items if not shape.startswith("text_")}
         plans["search_many"] = reader.search_many(batch, k=10)
+        w = inputs.WORDS
+        plans["filtered"] = reader.query(P.And((P.Term(w[3]), P.FieldEq("lang", "fr"))), k=10)
+        plans["phrase_in_and"] = reader.query(P.And((P.Phrase((w[0], w[1])), P.Term(w[2]))), k=10)
         for name, df in plans.items():
             with open(os.path.join(args.out, f"{name}.txt"), "w") as f:
                 f.write(explain(df, index_dir))

@@ -1,5 +1,5 @@
-"""Round-6 measurement probe (guide §1): same corpus/shape as bench.py
-but with per-query repeats (min-of-N beats the graft's noisy windows),
+"""Scale probe: builds a 50k-doc synthetic corpus, then times a fixed
+query set with per-query repeats (min-of-N beats noisy shared hosts),
 per-build-stage timing, and optional explain capture.
 
 Usage: python scripts/probe_r06.py [--reps 3] [--tag label] [--skip-build]
@@ -40,6 +40,11 @@ QUERY_SET = {
     "q_phrase": P.Phrase(("quick", "brown", "fox")),
     "q_prox": P.Proximity(("quick", "fox"), window=5),
 }
+# plans outside the kernel's top-k shapes: a term under a field
+# predicate (match-set join, BM25 from one flat-OR kernel plan) and the
+# unscored match set of a term-only tree (the kernel's weightless tree)
+Q_FILTERED = P.And((P.Term("w00050"), P.FieldEq("lang", "fr")))
+M_TREE = P.And((P.Or((P.Term("w00050"), P.Term("w01500"))), P.Not(P.Term("w00007"), P.Term("w00002"))))
 
 
 def main():
@@ -90,8 +95,16 @@ def main():
         for name in ("q_term_head", "q_or2", "q_or4", "q_and2"):
             sc.setJobDescription(f"{name}_wand rep{rep}")
             t0 = time.time()
-            reader.search_wand(QUERY_SET[name], k=10).collect()
+            reader.search(QUERY_SET[name], k=10).collect()
             timings.setdefault(name + "_wand", []).append(round(time.time() - t0, 4))
+        for name, run in (
+            ("q_filtered", lambda: reader.search(Q_FILTERED, k=10).collect()),
+            ("m_tree", lambda: reader._match_set(M_TREE).collect()),
+        ):
+            sc.setJobDescription(f"{name} rep{rep}")
+            t0 = time.time()
+            run()
+            timings.setdefault(name, []).append(round(time.time() - t0, 4))
         sc.setJobDescription(f"search_many rep{rep}")
         t0 = time.time()
         reader.search_many(QUERY_SET, k=10).collect()
@@ -136,7 +149,7 @@ def main():
         for name, node in QUERY_SET.items():
             cap(reader.search(node, k=10), f"{name}.txt")
         for name in ("q_term_head", "q_or2", "q_or4", "q_and2"):
-            cap(reader.search_wand(QUERY_SET[name], k=10), f"{name}_wand.txt")
+            cap(reader.search(QUERY_SET[name], k=10), f"{name}_wand.txt")
         cap(reader.search_many(QUERY_SET, k=10), "queryset_batched.txt")
 
     shutil.rmtree(idx_dir, ignore_errors=True)

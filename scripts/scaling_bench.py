@@ -74,7 +74,7 @@ def run_level(cpus: int, corpus: str) -> dict:
         P.Or((P.Term("w00050"), P.Term("w01500"))),
         P.And((P.Term("w00050"), P.Term("w00007"))),
     ):
-        reader.search_wand(node, k=10).collect()
+        reader.search(node, k=10).collect()
     query_sec = time.time() - qt0
     # sanity: docIDs stable across parallelism (rank-identity precondition)
     top = [r["doc_id"] for r in reader.search(P.Or((P.Term("w00050"),)), k=5).collect()]

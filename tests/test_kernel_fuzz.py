@@ -6,7 +6,10 @@ without tombstones. Scores must be bitwise equal.
 Two levels: the kernel alone (``wand.score_bin`` over the collected
 segment rows, binned here exactly as the Spark plan bins them — fast, so
 many examples), and the whole Spark plan (``search`` / the unlimited
-kernel scan) on the live, tombstone-row and tombstone-mask paths."""
+kernel scan) on the live, tombstone-row and tombstone-mask paths. Trees
+with phrase and proximity leaves check the match-set joins and the
+kernel-scored match set around them (``search``, ``scored_matches``,
+``_match_set``) on the same three paths."""
 
 import random
 
@@ -83,15 +86,6 @@ def cases(spark, tmp_path_factory):
 terms = st.sampled_from(VOCAB + ["zzz"])  # zzz: absent from the corpus
 boosts = st.sampled_from([1.0, 0.5, 2.0, 3.0])
 leaves = st.builds(lambda t, b: P.Term(t, boost=b), terms, boosts)
-trees = st.recursive(
-    leaves,
-    lambda kids: st.one_of(
-        st.builds(lambda cs, b: P.Or(tuple(cs), boost=b), st.lists(kids, min_size=1, max_size=3), boosts),
-        st.builds(lambda cs, b: P.And(tuple(cs), boost=b), st.lists(kids, min_size=1, max_size=3), boosts),
-        st.builds(P.Not, kids, kids),
-    ),
-    max_leaves=6,
-)
 phrases = st.builds(
     lambda ts, b: P.Phrase(tuple(ts), boost=b), st.lists(terms, min_size=2, max_size=3), boosts
 )
@@ -101,7 +95,21 @@ proximities = st.builds(
     st.integers(1, 6),
     boosts,
 )
+
+
+def _boolean(kids):
+    return st.one_of(
+        st.builds(lambda cs, b: P.Or(tuple(cs), boost=b), st.lists(kids, min_size=1, max_size=3), boosts),
+        st.builds(lambda cs, b: P.And(tuple(cs), boost=b), st.lists(kids, min_size=1, max_size=3), boosts),
+        st.builds(P.Not, kids, kids),
+    )
+
+
+trees = st.recursive(leaves, _boolean, max_leaves=6)
 nodes = st.one_of(trees, phrases, proximities)
+# boolean trees whose leaves may be phrases and proximities too: the
+# match-set joins around the kernel's positional and term-tree plans
+mixed_trees = st.recursive(st.one_of(leaves, phrases, proximities), _boolean, max_leaves=5)
 KS = st.sampled_from([1, 3, None])
 BINS = st.sampled_from([1, 3, 7])
 PATHS = st.sampled_from(["live", "rows", "masks"])
@@ -158,3 +166,21 @@ def test_search_many_kernel_matches_oracle(cases, batch, k, path):
     for i, node in enumerate(batch):
         mine = sorted(got.get(str(i), []), key=lambda x: (-x[1], x[0]))
         assert mine == case.oracle.search(node, k=k), i
+
+
+@settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(node=mixed_trees, path=PATHS)
+def test_mixed_trees_match_oracle(cases, node, path):
+    """Trees with phrase and proximity leaves: the top-k of ``search``,
+    the full ``scored_matches`` set (bitwise scores, score-0 docs
+    included) and the unscored ``_match_set`` all equal the oracle's."""
+    case = cases[path]
+    r = case.reader
+    want = case.oracle.search(node, k=ALL)
+    for k in (1, 3):
+        got = [(x["doc_id"], x["score"]) for x in r.search(node, k=k).collect()]
+        assert got == want[:k], k
+    scored = [(x["doc_id"], x["score"]) for x in r.scored_matches(node).collect()]
+    assert sorted(scored, key=lambda x: (-x[1], x[0])) == want
+    matched = sorted(x["doc_id"] for x in r._match_set(node).collect())
+    assert matched == sorted(case.oracle._match(node))

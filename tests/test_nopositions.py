@@ -46,8 +46,8 @@ def test_scored_and_boolean_results_identical(spark, two_indexes):
         ra = [(r["doc_id"], r["score"]) for r in a.search(node, k=10).collect()]
         rb = [(r["doc_id"], r["score"]) for r in b.search(node, k=10).collect()]
         assert ra == rb, node
-    wa = [(r["doc_id"], r["score"]) for r in a.search_wand(P.Or((P.Term("w00050"), P.Term("w01500"))), k=10).collect()]
-    wb = [(r["doc_id"], r["score"]) for r in b.search_wand(P.Or((P.Term("w00050"), P.Term("w01500"))), k=10).collect()]
+    wa = [(r["doc_id"], r["score"]) for r in a.search(P.Or((P.Term("w00050"), P.Term("w01500"))), k=10).collect()]
+    wb = [(r["doc_id"], r["score"]) for r in b.search(P.Or((P.Term("w00050"), P.Term("w01500"))), k=10).collect()]
     assert wa == wb
 
 

@@ -57,6 +57,34 @@ def test_resume_after_crash(spark, tmp_path):
     assert a == b
 
 
+def test_term_stats_bytes_are_reproducible(spark, tmp_path):
+    """Two builds of one corpus write byte-identical term_stats files
+    (rows sorted by term within each partition, not left in the
+    aggregate's shuffle-fetch order), so index sizes repeat exactly."""
+    import hashlib
+
+    import pyarrow.parquet as pq
+
+    def digests(idx_dir):
+        root = os.path.join(idx_dir, "term_stats")
+        return sorted(
+            (f.split("-")[1], hashlib.sha256(open(os.path.join(root, f), "rb").read()).hexdigest())
+            for f in os.listdir(root)
+            if f.endswith(".parquet")
+        )
+
+    pages = generate_pages(spark, 300, seed=42, partitions=4)
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    build_index(spark, pages, a, BuildConfig())
+    build_index(spark, pages, b, BuildConfig())
+    assert digests(a) and digests(a) == digests(b)
+    root = os.path.join(a, "term_stats")
+    for f in os.listdir(root):
+        if f.endswith(".parquet"):
+            terms = pq.read_table(os.path.join(root, f)).column("term").to_pylist()
+            assert terms == sorted(terms), f
+
+
 def test_resume_after_term_stats_matches_fresh_corpus_stats(spark, tmp_path):
     """corpus_stats per-field sums: the fresh build observes them on the
     term_stats write job; a resume (term_stats committed, corpus_stats

@@ -64,6 +64,6 @@ def test_salted_rank_identity(spark, salted_index):
         for bins in (1, 5):
             gw = [
                 (r["doc_id"], r["score"])
-                for r in reader.search_wand(node, k=10, n_bins=bins).collect()
+                for r in reader.search(node, k=10, n_bins=bins).collect()
             ]
             assert gw == want, f"wand bins={bins}"

@@ -11,13 +11,13 @@ from noise_spark.query import plan as P
 from noise_spark.query.wand import BinQuery, score_bin
 
 
-def _kernel_topk(terms, lo, hi, k, avg_dls, theta0=0.0, stats=None):
+def _kernel_topk(terms, lo, hi, k, avg_dls):
     """The kernel's flat-OR top-k over hand-built blocks: ``terms`` maps
     term → (weight, block rows)."""
     pdf = pd.DataFrame([dict(r, term=t) for t, (_, rows) in terms.items() for r in rows])
     weights = {t: w for t, (w, _) in terms.items()}
-    q = BinQuery(("or", sorted(weights)), weights, avg_dls, k, theta0)
-    ((_, docs, scores),) = score_bin(pdf, lo, hi, {"q": q}, stats=stats)
+    q = BinQuery(("or", sorted(weights)), weights, avg_dls, k)
+    ((_, docs, scores),) = score_bin(pdf, lo, hi, {"q": q})
     return [(int(d), float(s)) for d, s in zip(docs, scores)]
 
 
@@ -94,62 +94,6 @@ def test_wand_bin_unit_pruning():
     assert [d for d, _ in got] == [d for d, _ in want]
     for (gd, gs), (wd, ws) in zip(got, want):
         assert gs == pytest.approx(ws, rel=1e-12)
-
-
-def test_seeded_theta_decodes_fewer_blocks(reader):
-    """Global-θ seeding must keep results identical while decoding
-    measurably fewer blocks than θ=0 (skipping engages from the first
-    pivot instead of only after each bin's heap fills)."""
-    # skewed query: rare high-idf terms (df≈5) + a Zipf-head term — the
-    # shape where θ binds. θ₀ lands in the rare tier, so bins without
-    # rare docs evaluate nothing; unseeded, every bin first fills its own
-    # heap from common-term blocks.
-    node = P.Or((P.Term("brown"), P.Term("fox"), P.Term("w00000")))
-    unseeded = [
-        (r["doc_id"], r["score"])
-        for r in reader.search_wand(node, k=5, n_bins=7, seed_theta=False).collect()
-    ]
-    blocks_unseeded = reader.last_blocks_decoded.value
-    seeded = [
-        (r["doc_id"], r["score"])
-        for r in reader.search_wand(node, k=5, n_bins=7, seed_theta=True).collect()
-    ]
-    blocks_seeded = reader.last_blocks_decoded.value
-    assert seeded == unseeded
-    assert blocks_seeded < blocks_unseeded, (blocks_seeded, blocks_unseeded)
-
-
-def test_wand_bin_theta0_exact():
-    """A seeded θ₀ at (or just below) the true kth score must not change
-    the result; a θ₀ above it may drop docs — never produced by
-    _seed_theta, but assert the lower-bound contract boundary."""
-    rng = np.random.default_rng(3)
-    avg_dl = 80.0
-    ids = np.sort(rng.choice(1000, size=400, replace=False))
-    tfs = rng.integers(1, 6, size=ids.size)
-    dls = rng.integers(40, 160, size=ids.size)
-    rows = []
-    for s in range(0, ids.size, 64):
-        e = min(s + 64, ids.size)
-        rows.append(
-            {
-                "first_doc": int(ids[s]),
-                "last_doc": int(ids[e - 1]),
-                "docs": codec.delta_encode(ids[s:e]),
-                "tfs": codec.varbyte_encode(tfs[s:e].astype(np.uint64)),
-                "dls": codec.varbyte_encode(dls[s:e].astype(np.uint64)),
-                "max_tf": int(tfs[s:e].max()),
-                "min_dl": int(dls[s:e].min()),
-            }
-        )
-    terms = {"t": (1.5, rows)}
-    avg_dls = {"t": avg_dl}
-    base = _kernel_topk(terms, 0, 1000, 10, avg_dls)
-    kth = base[-1][1]
-    stats: dict = {}
-    seeded = _kernel_topk(terms, 0, 1000, 10, avg_dls, theta0=kth * (1.0 - 1e-9), stats=stats)
-    assert seeded == base
-    assert stats["blocks_decoded"] >= 1
 
 
 def test_search_many_matches_individual(reader, small_oracle):
